@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -11,9 +11,66 @@ import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
   * partition-pruned, row-group-skipped columnar reads with no extra work here.
   */
 object Tables {
+
+  /** Loads `dir/name.parquet`. A bare parquet read runs a Spark job to
+    * infer the schema from a file footer; this one reuses the schema a
+    * previous load of the same files inferred in the same session, so a
+    * repeat load of an unchanged table runs no job. The catalog key is the
+    * table path plus every file under it (path, length, modification
+    * time), so an appended or rewritten file re-infers.
+    */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     Sessions.tune(spark)
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    SchemaCatalog.fingerprint(spark, path) match {
+      case None => spark.read.parquet(path) // missing path: Spark raises its own error
+      case Some(fp) =>
+        SchemaCatalog.lookup(spark, path, fp) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            SchemaCatalog.store(spark, path, fp, df.schema)
+            df
+        }
+    }
+  }
+
+  /** Session-scoped inferred schemas, one per table path, each valid for
+    * the file listing (and inference conf) it was inferred under.
+    */
+  private object SchemaCatalog {
+    /** every file under the table path as (path, length, mtime), plus the
+      * session conf that changes what parquet schema inference returns */
+    type Fingerprint = (Seq[(String, Long, Long)], Seq[Option[String]])
+    private val InferenceConf = Seq(
+      "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.parquet.binaryAsString",
+      "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
+      "spark.sql.parquet.mergeSchema")
+    private val bySession = java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, Map[String, (Fingerprint, StructType)]])
+
+    def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] = {
+      val p = new org.apache.hadoop.fs.Path(path)
+      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (!fs.exists(p)) None
+      else {
+        val files = Seq.newBuilder[(String, Long, Long)]
+        val it = fs.listFiles(p, true)
+        while (it.hasNext) {
+          val f = it.next()
+          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+        }
+        Some((files.result().sorted, InferenceConf.map(spark.conf.getOption)))
+      }
+    }
+
+    def lookup(spark: SparkSession, path: String, fp: Fingerprint): Option[StructType] =
+      Option(bySession.get(spark)).flatMap(_.get(path)).collect { case (f, schema) if f == fp => schema }
+
+    def store(spark: SparkSession, path: String, fp: Fingerprint, schema: StructType): Unit =
+      bySession.synchronized {
+        bySession.put(spark, Option(bySession.get(spark)).getOrElse(Map.empty).updated(path, (fp, schema)))
+      }
   }
 
   /** S3 capability check — the Spark analogue of the reference's eager

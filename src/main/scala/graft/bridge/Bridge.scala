@@ -14,6 +14,8 @@ object SqlBridge {
     org.apache.spark.sql.graft.SqlBridgeImpl.registerTableFunction(spark, name, builder)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.graft.SqlBridgeImpl.ofRows(spark, plan)
+  def persistRows(ds: Dataset[_]): DataFrame =
+    org.apache.spark.sql.graft.SqlBridgeImpl.persistRows(ds)
   def analyzedPlan(df: Dataset[_]): LogicalPlan =
     org.apache.spark.sql.graft.SqlBridgeImpl.analyzedPlan(df)
 }

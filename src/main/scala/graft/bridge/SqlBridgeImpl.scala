@@ -32,6 +32,51 @@ object SqlBridgeImpl {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Runs `ds` once, keeps its rows in an RDD persisted in memory
+    * (spilling to disk), and returns a DataFrame over that RDD: how rows
+    * that several consumers read are computed once. It is
+    * `Dataset.localCheckpoint`'s shape with the lineage kept, so a lost
+    * block is recomputed from `ds`'s plan. Nothing is registered with the
+    * session's CacheManager (which would hold a `Dataset.persist` until
+    * someone unpersists it); Spark's ContextCleaner unpersists the RDD
+    * once the returned DataFrame (and everything planned from it) is
+    * unreachable — at the first driver GC after that, since the cleaner
+    * tracks weak references (its periodic GC,
+    * `spark.cleaner.periodicGC.interval`, defaults to 30 min). The run is
+    * one SQL execution, so query listeners see its plan and metrics. Like
+    * a cached relation, the result is planned with its real row count
+    * rather than the input's estimate, so small results still broadcast.
+    */
+  def persistRows(ds: Dataset[_]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+    import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
+    val cds = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+    val qe = cds.queryExecution
+    val (rows, n) = SQLExecution.withNewExecutionId(qe, Some("persistRows")) {
+      val r = qe.toRdd.map(_.copy()).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      (r, r.count())
+    }
+    // output attributes as Dataset.localCheckpoint derives them, but the
+    // partitioning of the plan that produced the rows: under AQE that is
+    // the final plan, which only exists now that it ran, so consumers
+    // keyed like it (a hash-partitioned input) plan no shuffle of their own
+    val lr = LogicalRDD.fromDataset(rows, cds, cds.isStreaming)
+    val ran = qe.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val partitioning = ran.outputPartitioning match {
+      case p: Expression if !p.references.subsetOf(AttributeSet(lr.output)) => lr.outputPartitioning
+      case p => p
+    }
+    val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(lr.output) * n, rowCount = Some(n))
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      cds.sparkSession,
+      LogicalRDD(lr.output, rows, partitioning, lr.outputOrdering, lr.isStreaming)(cds.sparkSession, Some(stats), None))
+  }
+
   /** Analyzed LogicalPlan of a Dataset (to embed as a custom node's child). */
   def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].queryExecution.analyzed

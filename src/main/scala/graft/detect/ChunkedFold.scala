@@ -1,5 +1,6 @@
 package graft.detect
 
+import graft.bridge.SqlBridge
 import graft.model.TsSample
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
@@ -100,15 +101,13 @@ object ChunkedEma {
     import spark.implicits._
     require(chunkMs > 0, "chunkMs must be positive")
 
-    val chunked = points.toDF()
-      .select(
-        col("seriesKey"), floor(col("tsMs") / chunkMs).cast("long").as("chunk"),
-        col("tsMs"), col("value"))
-      .as[ChunkPoint]
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // consumed by pass 1 AND pass 3 — materialize once or both recompute
     // the whole upstream scan/guard pipeline
-    chunked.count()
+    val chunked = SqlBridge.persistRows(
+      points.toDF().select(
+        col("seriesKey"), floor(col("tsMs") / chunkMs).cast("long").as("chunk"),
+        col("tsMs"), col("value")))
+      .as[ChunkPoint]
 
     // pass 1 — parallel across (series, chunk)
     val summaries = chunked

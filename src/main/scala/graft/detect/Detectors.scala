@@ -1,6 +1,7 @@
 package graft.detect
 
 import graft.config.{Constants, DetectorConfig}
+import graft.bridge.SqlBridge
 import graft.model.TsSample
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
@@ -564,15 +565,13 @@ object Detectors {
     // '#' separator cannot be forged by a key containing '#'. Unlike
     // monotonically_increasing_id, re-evaluation under AQE re-planning or
     // task retry always reproduces the same id — `w` is consumed twice below.
-    val w = windows
-      .withColumn(
-        "wid",
-        concat_ws("#", base64(col("seriesKey").cast("binary")), col("startTsMs")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // One row per anomaly window — tiny. Materializing stops the two
     // consumers below from recomputing the whole upstream scoring
     // pipeline twice.
-    w.count()
+    val w = SqlBridge.persistRows(
+      windows.withColumn(
+        "wid",
+        concat_ws("#", base64(col("seriesKey").cast("binary")), col("startTsMs"))))
     val sliced = points.toDF()
       .join(
         w.select(col("wid"), col("seriesKey").as("k"), col("startTsMs"), col("endTsMs")),

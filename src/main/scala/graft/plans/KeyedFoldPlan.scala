@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
-import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, HashPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, CoalescedHashPartitioning, Distribution, HashPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 
 /** Whole-operator Catalyst integration of the keyed sequential fold
@@ -113,13 +113,18 @@ final case class KeyedFoldExec(
   // Anything not remappable degrades to Unknown — republishing a child
   // partitioning phrased in child attributes would violate the SparkPlan
   // contract (outputPartitioning must reference this node's output).
-  override def outputPartitioning: Partitioning = child.outputPartitioning match {
-    case h: HashPartitioning if h.expressions == Seq(childAttr(keyName)) =>
-      output.find(_.name == keyName)
-        .map(a => HashPartitioning(Seq(a), h.numPartitions))
-        .getOrElse(UnknownPartitioning(h.numPartitions))
-    case p if p.numPartitions == 1 => p // SinglePartition carries no attrs
-    case other => UnknownPartitioning(other.numPartitions)
+  override def outputPartitioning: Partitioning = {
+    def onOutputKey(h: HashPartitioning): Option[HashPartitioning] =
+      if (h.expressions != Seq(childAttr(keyName))) None
+      else output.find(_.name == keyName).map(a => HashPartitioning(Seq(a), h.numPartitions))
+    child.outputPartitioning match {
+      case h: HashPartitioning => onOutputKey(h).getOrElse(UnknownPartitioning(h.numPartitions))
+      // AQE's coalesced read of a key exchange, or a materialized one
+      case c: CoalescedHashPartitioning =>
+        onOutputKey(c.from).map(h => c.copy(from = h)).getOrElse(UnknownPartitioning(c.numPartitions))
+      case p if p.numPartitions == 1 => p // SinglePartition carries no attrs
+      case other => UnknownPartitioning(other.numPartitions)
+    }
   }
 
   // rows leave the kernel in (key, ts) order within each partition

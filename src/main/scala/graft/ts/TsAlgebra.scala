@@ -34,7 +34,16 @@ final case class TsCols(
   */
 object TsAlgebra {
 
-  def query(df: DataFrame, cfg: TsQueryConfig, cols: TsCols = TsCols()): DataFrame = {
+  /** The full range query: `order(select(df, cfg, cols), cfg, cols)`. */
+  def query(df: DataFrame, cfg: TsQueryConfig, cols: TsCols = TsCols()): DataFrame =
+    order(select(df, cfg, cols), cfg, cols)
+
+  /** The row-selection part of a range query — filters (F1–F3), latest
+    * (F5), bucketed aggregation (A1–A12) and the per-series COUNT (F4) —
+    * with no global order. For consumers that re-partition by series
+    * anyway (the detectors), this skips the range-partitioning sort.
+    */
+  def select(df: DataFrame, cfg: TsQueryConfig, cols: TsCols = TsCols()): DataFrame = {
     val key = col(cols.key)
     val ts = col(cols.ts)
     val value = col(cols.value)
@@ -115,9 +124,14 @@ object TsAlgebra {
         .where(col("_rn") <= n)
         .drop("_rn")
     }
+    out
+  }
 
-    // F6 ordering: RANGE asc / REVRANGE desc by timestamp
-    val ordered = out.orderBy(col(cols.key).asc, if (cfg.reversed) col(cols.ts).desc else col(cols.ts).asc)
+  /** The ordering part of a range query over `select`'s rows: F6 ordering
+    * (RANGE asc / REVRANGE desc by timestamp, per key) and the COUNT limit.
+    */
+  def order(rows: DataFrame, cfg: TsQueryConfig, cols: TsCols = TsCols()): DataFrame = {
+    val ordered = rows.orderBy(col(cols.key).asc, if (cfg.reversed) col(cols.ts).desc else col(cols.ts).asc)
     // F4 COUNT limit: first N in scan order (single-series semantics —
     // becomes TakeOrderedAndProject, the distributed top-k)
     cfg.count.map(ordered.limit).getOrElse(ordered)

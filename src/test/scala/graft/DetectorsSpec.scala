@@ -5,6 +5,7 @@ import graft.config.DetectorConfig
 import graft.detect.Detectors
 import graft.model.TsSample
 import graft.ts.TsCols
+import org.apache.spark.graft.SparkInternals
 import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -473,6 +474,88 @@ class DetectorsSpec extends AnyFunSuite {
       points.toDF.withColumn("score", org.apache.spark.sql.functions.lit(42.0)))
     val s = Detectors.score(rampSpike, DetectorConfig(algorithmName = "always_42"))
     assert(s.select("score").distinct().collect().map(_.getDouble(0)).toSeq == Seq(42.0))
+  }
+
+  // ---- one execution per monitor request --------------------------------
+
+  private val monitorCols = TsCols(key = "series", ts = "ts_ms", value = "value")
+
+  /** Two series with a spike each, and one too short for the guard. */
+  private def monitorInput() =
+    ((1 to 12).map(i => ("web1:cpu", i * 1000L, if (i == 7) 90.0 else 10.0 + i)) ++
+      (1 to 9).map(i => ("db#2:mem", i * 1000L, if (i == 4) 40.0 else 5.0)) ++
+      (1 to 3).map(i => ("short", i * 1000L, 1.0)))
+      .toDF("series", "ts_ms", "value")
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  private def planOf(df: org.apache.spark.sql.Dataset[_]): String =
+    df.queryExecution.executedPlan.toString.toLowerCase
+
+  test("monitor: every facet plan skips the global sort and shuffles nothing; a COUNT limit keeps its ordered limit") {
+    val res = Graft.monitor(monitorInput(), monitorCols)
+    Seq("scores" -> res.scores, "anomalies" -> res.anomalies, "metadata" -> res.metadata).foreach { case (n, f) =>
+      f.collect()
+      assert(!planOf(f).contains("rangepartitioning"), s"$n facet plan sorts globally:\n${planOf(f)}")
+      // the shared points are hash-partitioned by series, and the facets'
+      // per-series operators (KeyedFoldExec included) must see that
+      val plan = f.queryExecution.executedPlan.toString
+      assert("(?<!Broadcast)Exchange ".r.findAllIn(plan).isEmpty, s"$n facet plan shuffles:\n$plan")
+    }
+    val guarded = Graft.guardedPoints(monitorInput(), monitorCols, graft.config.TsQueryConfig())
+    assert(!planOf(guarded).contains("rangepartitioning"), planOf(guarded))
+
+    // COUNT takes the first N rows in (key, ts) order: db#2:mem's 9
+    // points, then short's 3, which the guard drops; web1:cpu sorts last
+    val counted = graft.config.TsQueryConfig(count = Some(12))
+    assert(planOf(Graft.guardedPoints(monitorInput(), monitorCols, counted)).contains("takeorderedandproject"))
+    val meta = Graft.monitor(monitorInput(), monitorCols, counted).metadata.collect()
+      .map(r => r.getAs[String]("seriesKey") -> r.getAs[Long]("dataPointsAnalyzed")).toMap
+    assert(meta == Map("db#2:mem" -> 9L))
+  }
+
+  test("monitor: a facet recomputes lost blocks of the shared points from lineage") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val res = Graft.monitor(monitorInput(), monitorCols)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"monitor should persist exactly the guarded points, persisted $added")
+    val scores = sortedRows(res.scores)
+    SparkInternals.dropRddBlocks(sc, added.head)
+    assert(SparkInternals.rddBlocks(sc, added.head).isEmpty)
+    val fresh = Graft.monitor(monitorInput(), monitorCols)
+    assert(sortedRows(res.anomalies) == sortedRows(fresh.anomalies) && sortedRows(fresh.anomalies).nonEmpty)
+    assert(sortedRows(res.metadata) == sortedRows(fresh.metadata))
+    assert(sortedRows(res.scores) == scores && scores.size == 21)
+  }
+
+  test("refine and chunked EMA leave no cached relation or persisted RDD behind") {
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+    def run(): Unit = {
+      val cfg = DetectorConfig(
+        refineAlgorithmName = Some("absolute_threshold"), absoluteThresholdUpper = Some(0.0))
+      (1 to 3).foreach { _ =>
+        val res = Graft.monitor(monitorInput(), monitorCols, detCfg = cfg)
+        assert(res.anomalies.collect().nonEmpty && res.scores.count() == 21)
+      }
+      val series = pts((1 to 20).map(i => (1L, i * 1000L, if (i == 9) 50.0 else 1.0 * i)): _*)
+      val wins = Detectors.anomalies(Detectors.withThreshold(Detectors.derivativeScores(series), DetectorConfig()))
+      assert(Detectors.refineExact(series, wins, DetectorConfig(algorithmName = "exp_avg_detector")).count() > 0)
+      assert(Detectors.expAvgScoresChunked(series, chunkMs = 5000L).count() == 20)
+    }
+    run()
+    // ContextCleaner releases an unreachable RDD after a GC clears it
+    def released = SparkInternals.cacheManagerIsEmpty(spark) && sc.getPersistentRDDs.isEmpty
+    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (!released && System.nanoTime < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(SparkInternals.cacheManagerIsEmpty(spark), "a Dataset.persist was never released")
+    assert(sc.getPersistentRDDs.isEmpty, s"persisted RDDs outlived their results: ${sc.getPersistentRDDs.keySet}")
   }
 
   test("client defaults apply; per-call config overrides them (EP2 contract)") {
