@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan dumper (optimization-round measurement harness, guide §1/§7.2):
@@ -23,13 +22,7 @@ object Plans {
       if (args(2) == "all") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val suffix = if (args.length > 3) args(3) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.get("plans")
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

@@ -1,5 +1,6 @@
 package graft.bridge
 
+import graft.functions.GraftExtensions.SqlFunction
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -8,10 +9,10 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 object SqlBridge {
   def column(e: Expression): Column = org.apache.spark.sql.graft.SqlBridgeImpl.column(e)
   def expression(c: Column): Expression = org.apache.spark.sql.graft.SqlBridgeImpl.expression(c)
-  def registerFunction(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
-    org.apache.spark.sql.graft.SqlBridgeImpl.registerFunction(spark, name, builder)
-  def registerTableFunction(spark: SparkSession, name: String, builder: Seq[Expression] => LogicalPlan): Unit =
-    org.apache.spark.sql.graft.SqlBridgeImpl.registerTableFunction(spark, name, builder)
+  def registerFunction(spark: SparkSession, fn: SqlFunction[Expression]): Unit =
+    org.apache.spark.sql.graft.SqlBridgeImpl.registerFunction(spark, fn)
+  def registerTableFunction(spark: SparkSession, fn: SqlFunction[LogicalPlan]): Unit =
+    org.apache.spark.sql.graft.SqlBridgeImpl.registerTableFunction(spark, fn)
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.graft.SqlBridgeImpl.ofRows(spark, plan)
   def persistRows(ds: Dataset[_]): DataFrame =

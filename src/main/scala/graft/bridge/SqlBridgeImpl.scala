@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import _root_.graft.functions.GraftExtensions.SqlFunction
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
@@ -13,19 +14,18 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 object SqlBridgeImpl {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
-  def registerFunction(spark: SparkSession, name: String, builder: Seq[Expression] => Expression): Unit =
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Scalar function: `SELECT name(args…)`, registered with its usage text. */
+  def registerFunction(spark: SparkSession, fn: SqlFunction[Expression]): Unit =
+    spark.sessionState.functionRegistry.registerFunction(fn._1, fn._2, fn._3)
 
   /** Table-valued function: `SELECT * FROM name(args…)` resolves through
     * the session's TableFunctionRegistry to a LogicalPlan.
     */
   def registerTableFunction(
       spark: SparkSession,
-      name: String,
-      builder: Seq[Expression] => org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit =
-    spark.sessionState.tableFunctionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
+      fn: SqlFunction[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]): Unit =
+    spark.sessionState.tableFunctionRegistry.registerFunction(fn._1, fn._2, fn._3)
 
   /** DataFrame from a raw LogicalPlan (custom plan nodes). */
   def ofRows(spark: SparkSession, plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =

@@ -124,6 +124,11 @@ object Graph {
     * computes the identical integer, plus the cc double derived from it.
     * Input edges may carry duplicates, reversals, and self-loops — the
     * canonical distinct (least, greatest) pass absorbs all three.
+    *
+    * The result is computed before this returns and comes back persisted
+    * (one metadata-sized cache entry, a row per node): the caller
+    * releases it with `.unpersist()`. The intermediates are released
+    * before returning; if the computation throws, the result is too.
     */
   def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
     // Multi-consumer persists (the `exciseDuplicateChunks` cache
@@ -202,12 +207,11 @@ object Graph {
         // against 0.20 s for the identical warm tail (plans/r16 probe):
         // its materialization runs through `Dataset.rdd`, outside the
         // adaptive re-planning that broadcasts/coalesces the wedge
-        // joins. One metadata-sized cache entry (a row per node) remains
-        // with the RETURNED frame — callers that need a fully clean
-        // session release it with `.unpersist()`; the edge-scale
-        // intermediates, the actual r15 leak, are gone either way.
+        // joins. The returned frame keeps its cache entry (see the
+        // scaladoc); a failed fill releases it too.
         val res = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        res.count()
+        try res.count()
+        catch { case t: Throwable => res.unpersist(blocking = false); throw t }
         res
       } finally oriented.unpersist(blocking = false)
     } finally {

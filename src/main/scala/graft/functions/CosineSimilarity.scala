@@ -73,8 +73,12 @@ object GraftFunctions {
     graft.bridge.SqlBridge.column(
       CosineSimilarity(graft.bridge.SqlBridge.expression(a), graft.bridge.SqlBridge.expression(b)))
 
-  /** SQL registration: SELECT cosine_sim(a, b). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    graft.bridge.SqlBridge.registerFunction(
-      spark, "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)))
+  /** SQL form, `SELECT cosine_sim(a, b)`: declared once, registered by
+    * `GraftExtensions` and `GraftExtensions.install`.
+    */
+  val cosineSim: GraftExtensions.SqlFunction[Expression] = GraftExtensions.declare(
+    classOf[CosineSimilarity], "cosine_sim",
+    "cosine_sim(a, b) - cosine similarity of two array<double> vectors, " +
+      "accumulated in index order (codegen'd single fused loop)")(
+    exprs => CosineSimilarity(exprs(0), exprs(1)))
 }

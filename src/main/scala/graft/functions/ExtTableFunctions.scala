@@ -29,6 +29,9 @@ import graft.bridge.SqlBridge
   * their own materialization points (the MinHash signature persist).
   * Consequence: the relation must exist when the query is ANALYZED, and
   * the signature-table persist runs then too.
+  *
+  * Each TVF is declared once in `functions`, registered the same way as
+  * `FoldTableFunctions.functions`.
   */
 object ExtTableFunctions {
 
@@ -269,20 +272,62 @@ object ExtTableFunctions {
     }
   }
 
-  /** Runtime registration into a live session (the no-config twin of the
-    * `spark.sql.extensions=graft.functions.GraftExtensions` path).
+  /** The extension TVFs, declared once: name, usage and builder, as
+    * `GraftExtensions` injects and installs them.
     */
-  def register(spark: SparkSession): Unit = {
-    SqlBridge.registerTableFunction(spark, MinhashPairsName, minhashPairsBuilder)
-    SqlBridge.registerTableFunction(spark, TfidfTopKName, tfidfTopKBuilder)
-    SqlBridge.registerTableFunction(spark, QualityLrName, qualityLrBuilder)
-    SqlBridge.registerTableFunction(spark, KmvOverlapName, kmvOverlapBuilder)
-    SqlBridge.registerTableFunction(spark, PpjoinPairsName, ppjoinPairsBuilder)
-    SqlBridge.registerTableFunction(spark, DedupClustersName, dedupClustersBuilder)
-    SqlBridge.registerTableFunction(spark, DedupExciseName, dedupExciseBuilder)
-    SqlBridge.registerTableFunction(spark, TrianglesName, trianglesBuilder)
-    SqlBridge.registerTableFunction(spark, ContainmentPairsName, containmentPairsBuilder)
-    SqlBridge.registerTableFunction(spark, ExactSubstringName, exactSubstringBuilder)
-    SqlBridge.registerTableFunction(spark, FuzzyDecontamName, fuzzyDecontamBuilder)
-  }
+  val functions: Seq[GraftExtensions.SqlFunction[LogicalPlan]] = Seq(
+    tvf(MinhashPairsName,
+      "minhash_pairs(table[, tau]) - MinHash-LSH near-dup pairs (da, db, jaccard) " +
+        "over a (doc_id, text) relation; same banded pipeline as Dedup.minhashLshPairs",
+      minhashPairsBuilder),
+    tvf(TfidfTopKName,
+      "tfidf_topk(table, k) - per-doc top-k tf-idf keywords over a (doc_id, text) " +
+        "relation; fixed-point integer idf, same plan as TextAnalysis.tfidfTopK",
+      tfidfTopKBuilder),
+    tvf(QualityLrName,
+      "quality_lr(table) - hashed-bag-of-words linear quality scores " +
+        "(doc_id, n_tokens, score, keep) over a (doc_id, text) relation",
+      qualityLrBuilder),
+    tvf(KmvOverlapName,
+      "kmv_overlap(table[, k]) - pairwise cross-source KMV token overlap " +
+        "(ga, gb, jaccard_est, union_est) over a (source, text) relation",
+      kmvOverlapBuilder),
+    tvf(PpjoinPairsName,
+      "ppjoin_pairs(table[, tau]) - EXACT prefix-filtered Jaccard pairs " +
+        "(da, db, jaccard) over a (doc_id, text) relation",
+      ppjoinPairsBuilder),
+    tvf(DedupClustersName,
+      "dedup_clusters(table[, tau]) - near-dup cluster assembly " +
+        "(doc_id, canonical_id, cluster_size) over a (doc_id, text) relation",
+      dedupClustersBuilder),
+    tvf(DedupExciseName,
+      "dedup_excise(table) - corpus-wide duplicated-span excision " +
+        "(doc_id, n_chunks, n_kept, clean_text) over a (doc_id, text) relation",
+      dedupExciseBuilder),
+    tvf(TrianglesName,
+      "triangles(table[, acol[, bcol]]) - per-node triangle counts and local " +
+        "clustering coefficients (node, deg, n_tri, cc_micro, cc) over an " +
+        "undirected edge relation",
+      trianglesBuilder),
+    tvf(ContainmentPairsName,
+      "containment_pairs(table[, tau]) - directed shingle-containment pairs " +
+        "(inner_id, outer_id, n_inner, n_shared, containment, jaccard) over a " +
+        "(doc_id, text) relation; result is cached once per (table, tau) per " +
+        "session - re-register a fresh view name after mutating the relation",
+      containmentPairsBuilder),
+    tvf(ExactSubstringName,
+      "exact_substring_excise(table[, w]) - exact-substring dedup: every " +
+        "duplicated token run >= w keeps only its corpus-first occurrence " +
+        "(doc_id, n_spans, n_tokens_removed, clean_text); cached once per " +
+        "(table, w) per session",
+      exactSubstringBuilder),
+    tvf(FuzzyDecontamName,
+      "fuzzy_decontaminate(train_table, probe_table[, tau[, n[, maxDf]]]) - " +
+        "containment-based eval-set decontamination ledger (train_id, " +
+        "contaminated, n_probe_matches, best_probe_id, max_containment, action); " +
+        "cached once per (tables, tau, n, maxDf) per session",
+      fuzzyDecontamBuilder))
+
+  private def tvf(name: String, usage: String, builder: Seq[Expression] => LogicalPlan) =
+    GraftExtensions.declare(getClass, name, usage)(builder)
 }

@@ -31,6 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * inserts (or elides, on bucketed layouts) the exchange/sort, and the
   * fold runs the identical bounded-state kernel — no collect_list, no
   * per-series buffering, 100 TB plan shape unchanged from Scala.
+  *
+  * Each TVF is declared once in `functions`; `GraftExtensions` (the
+  * `spark.sql.extensions` path) and `GraftExtensions.install` (a live
+  * session) both register that table.
   */
 object FoldTableFunctions {
 
@@ -276,21 +280,61 @@ object FoldTableFunctions {
         minAbsR = doubleArg(TopCorrName, args, 5, 0.5)))
   }
 
-  /** Runtime registration into a live session (the no-config twin of the
-    * `spark.sql.extensions=graft.functions.GraftExtensions` path).
+  /** The fold and time-series TVFs, declared once: name, usage and
+    * builder, as `GraftExtensions` injects and installs them.
     */
-  def register(spark: SparkSession): Unit = {
-    graft.bridge.SqlBridge.registerTableFunction(spark, ExpAvgName, expAvgBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, DerivativeName, derivativeBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, HoltName, holtBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, CusumName, cusumBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, HwName, hwBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, EsdName, esdBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, ChangepointName, changepointBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, StlName, stlBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, SeasonalStrengthName, seasonalStrengthBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, AsOfJoinName, asofJoinBuilder)
-    graft.bridge.SqlBridge.registerTableFunction(spark, TopCorrName, topCorrBuilder)
-    KeyedFoldPlan.ensureStrategy(spark) // the TVF plans need the fold strategy
-  }
+  val functions: Seq[GraftExtensions.SqlFunction[LogicalPlan]] = Seq(
+    tvf(ExpAvgName,
+      "exp_avg_fold(table[, alpha]) - D2 decay-EMA raw deviations over a " +
+        "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
+      expAvgBuilder),
+    tvf(DerivativeName,
+      "derivative_fold(table[, alpha]) - D3 derivative-EMA raw deviations over a " +
+        "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
+      derivativeBuilder),
+    tvf(HoltName,
+      "holt_fold(table[, alpha[, beta]]) - Holt level+trend forecaster raw deviations " +
+        "over a (seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
+      holtBuilder),
+    tvf(CusumName,
+      "cusum_fold(table[, slack]) - two-sided CUSUM accumulation over a pre-standardized " +
+        "(seriesKey, tsMs, value, mu, sd) relation; dev carries max(s+, s-)",
+      cusumBuilder),
+    tvf(HwName,
+      "hw_fold(table[, alpha[, beta[, gamma[, period]]]]) - Holt-Winters " +
+        "level+trend+additive-seasonal forecaster raw deviations over a " +
+        "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
+      hwBuilder),
+    tvf(EsdName,
+      "esd_outliers(table[, k[, cut]]) - generalized-ESD flagged points " +
+        "(seriesKey, tsMs, value, iter, r2_micro) over a (seriesKey, tsMs, value) relation",
+      esdBuilder),
+    tvf(ChangepointName,
+      "changepoint(table[, minSeg]) - per-series best level-shift split " +
+        "(split_ts_ms, n_left, n_right, left_mean, right_mean, gain_micro) " +
+        "over a (seriesKey, tsMs, value) relation",
+      changepointBuilder),
+    tvf(StlName,
+      "stl_decompose(table, period) - exact fixed-point STL-lite decomposition " +
+        "(seriesKey, tsMs, value, phase, trend_fp, seasonal_fp, resid_fp) " +
+        "over a (seriesKey, tsMs, value) relation",
+      stlBuilder),
+    tvf(SeasonalStrengthName,
+      "seasonal_strength(table, period) - per-series Hyndman seasonal/trend " +
+        "strength from the STL fixed point over a (seriesKey, tsMs, value) relation",
+      seasonalStrengthBuilder),
+    tvf(AsOfJoinName,
+      "asof_join(points, baseline[, direction[, toleranceMs]]) - merge_asof from " +
+        "SQL: (seriesKey, tsMs, value) matched to the latest/earliest/nearest " +
+        "(seriesKey, tsMs, baseline) within tolerance",
+      asofJoinBuilder),
+    tvf(TopCorrName,
+      "top_corr_pairs(table, bucketMs[, minBuckets[, nBands[, minBandMatches[, " +
+        "minAbsR]]]]) - sub-quadratic cross-series correlation over a " +
+        "(seriesKey, tsMs, value) relation: sign-sketch band candidates, then " +
+        "exact Pearson r on candidates only",
+      topCorrBuilder))
+
+  private def tvf(name: String, usage: String, builder: Seq[Expression] => LogicalPlan) =
+    GraftExtensions.declare(getClass, name, usage)(builder)
 }

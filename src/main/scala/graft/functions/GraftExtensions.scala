@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.bridge.SqlBridge
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** SparkSessionExtensions injection point — the config-driven way to ship
   * graft's native expressions into ANY session, including ones the
@@ -12,283 +14,44 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   *   spark.sql.extensions=graft.functions.GraftExtensions
   *
   * or programmatically: `SparkSession.builder.withExtensions(new
-  * GraftExtensions)`. Complements GraftFunctions.register, which needs a
-  * live session.
+  * GraftExtensions)`. On a live session, `GraftExtensions.install` does
+  * the same from the same declarations.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(extensions: SparkSessionExtensions): Unit = {
-    extensions.injectFunction(
-      (
-        FunctionIdentifier("cosine_sim"),
-        new ExpressionInfo(
-          classOf[CosineSimilarity].getName,
-          null,
-          "cosine_sim",
-          "cosine_sim(a, b) - cosine similarity of two array<double> vectors, " +
-            "accumulated in index order (codegen'd single fused loop)",
-          ""),
-        exprs => CosineSimilarity(exprs(0), exprs(1))))
-    // SQL surface of the fold detectors: table-valued functions planning
-    // into KeyedFoldNode (see FoldTableFunctions)
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.ExpAvgName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.ExpAvgName,
-          "exp_avg_fold(table[, alpha]) - D2 decay-EMA raw deviations over a " +
-            "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
-          ""),
-        FoldTableFunctions.expAvgBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.DerivativeName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.DerivativeName,
-          "derivative_fold(table[, alpha]) - D3 derivative-EMA raw deviations over a " +
-            "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
-          ""),
-        FoldTableFunctions.derivativeBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.HoltName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.HoltName,
-          "holt_fold(table[, alpha[, beta]]) - Holt level+trend forecaster raw deviations " +
-            "over a (seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
-          ""),
-        FoldTableFunctions.holtBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.CusumName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.CusumName,
-          "cusum_fold(table[, slack]) - two-sided CUSUM accumulation over a pre-standardized " +
-            "(seriesKey, tsMs, value, mu, sd) relation; dev carries max(s+, s-)",
-          ""),
-        FoldTableFunctions.cusumBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.HwName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.HwName,
-          "hw_fold(table[, alpha[, beta[, gamma[, period]]]]) - Holt-Winters " +
-            "level+trend+additive-seasonal forecaster raw deviations over a " +
-            "(seriesKey, tsMs, value) relation, planned through KeyedFoldExec",
-          ""),
-        FoldTableFunctions.hwBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.EsdName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.EsdName,
-          "esd_outliers(table[, k[, cut]]) - generalized-ESD flagged points " +
-            "(seriesKey, tsMs, value, iter, r2_micro) over a (seriesKey, tsMs, value) relation",
-          ""),
-        FoldTableFunctions.esdBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.ChangepointName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.ChangepointName,
-          "changepoint(table[, minSeg]) - per-series best level-shift split " +
-            "(split_ts_ms, n_left, n_right, left_mean, right_mean, gain_micro) " +
-            "over a (seriesKey, tsMs, value) relation",
-          ""),
-        FoldTableFunctions.changepointBuilder))
-    // SQL surface of the flagship extension operators (dedup/text): the
-    // builders delegate to the Scala implementations, zero drift
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.MinhashPairsName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.MinhashPairsName,
-          "minhash_pairs(table[, tau]) - MinHash-LSH near-dup pairs (da, db, jaccard) " +
-            "over a (doc_id, text) relation; same banded pipeline as Dedup.minhashLshPairs",
-          ""),
-        ExtTableFunctions.minhashPairsBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.TfidfTopKName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.TfidfTopKName,
-          "tfidf_topk(table, k) - per-doc top-k tf-idf keywords over a (doc_id, text) " +
-            "relation; fixed-point integer idf, same plan as TextAnalysis.tfidfTopK",
-          ""),
-        ExtTableFunctions.tfidfTopKBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.QualityLrName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.QualityLrName,
-          "quality_lr(table) - hashed-bag-of-words linear quality scores " +
-            "(doc_id, n_tokens, score, keep) over a (doc_id, text) relation",
-          ""),
-        ExtTableFunctions.qualityLrBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.KmvOverlapName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.KmvOverlapName,
-          "kmv_overlap(table[, k]) - pairwise cross-source KMV token overlap " +
-            "(ga, gb, jaccard_est, union_est) over a (source, text) relation",
-          ""),
-        ExtTableFunctions.kmvOverlapBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.PpjoinPairsName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.PpjoinPairsName,
-          "ppjoin_pairs(table[, tau]) - EXACT prefix-filtered Jaccard pairs " +
-            "(da, db, jaccard) over a (doc_id, text) relation",
-          ""),
-        ExtTableFunctions.ppjoinPairsBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.DedupClustersName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.DedupClustersName,
-          "dedup_clusters(table[, tau]) - near-dup cluster assembly " +
-            "(doc_id, canonical_id, cluster_size) over a (doc_id, text) relation",
-          ""),
-        ExtTableFunctions.dedupClustersBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.DedupExciseName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.DedupExciseName,
-          "dedup_excise(table) - corpus-wide duplicated-span excision " +
-            "(doc_id, n_chunks, n_kept, clean_text) over a (doc_id, text) relation",
-          ""),
-        ExtTableFunctions.dedupExciseBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.StlName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.StlName,
-          "stl_decompose(table, period) - exact fixed-point STL-lite decomposition " +
-            "(seriesKey, tsMs, value, phase, trend_fp, seasonal_fp, resid_fp) " +
-            "over a (seriesKey, tsMs, value) relation",
-          ""),
-        FoldTableFunctions.stlBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.SeasonalStrengthName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.SeasonalStrengthName,
-          "seasonal_strength(table, period) - per-series Hyndman seasonal/trend " +
-            "strength from the STL fixed point over a (seriesKey, tsMs, value) relation",
-          ""),
-        FoldTableFunctions.seasonalStrengthBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.AsOfJoinName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.AsOfJoinName,
-          "asof_join(points, baseline[, direction[, toleranceMs]]) - merge_asof from " +
-            "SQL: (seriesKey, tsMs, value) matched to the latest/earliest/nearest " +
-            "(seriesKey, tsMs, baseline) within tolerance",
-          ""),
-        FoldTableFunctions.asofJoinBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.TrianglesName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.TrianglesName,
-          "triangles(table[, acol[, bcol]]) - per-node triangle counts and local " +
-            "clustering coefficients (node, deg, n_tri, cc_micro, cc) over an " +
-            "undirected edge relation",
-          ""),
-        ExtTableFunctions.trianglesBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.ContainmentPairsName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.ContainmentPairsName,
-          "containment_pairs(table[, tau]) - directed shingle-containment pairs " +
-            "(inner_id, outer_id, n_inner, n_shared, containment, jaccard) over a " +
-            "(doc_id, text) relation; result is cached once per (table, tau) per " +
-            "session - re-register a fresh view name after mutating the relation",
-          ""),
-        ExtTableFunctions.containmentPairsBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.ExactSubstringName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.ExactSubstringName,
-          "exact_substring_excise(table[, w]) - exact-substring dedup: every " +
-            "duplicated token run >= w keeps only its corpus-first occurrence " +
-            "(doc_id, n_spans, n_tokens_removed, clean_text); cached once per " +
-            "(table, w) per session",
-          ""),
-        ExtTableFunctions.exactSubstringBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(ExtTableFunctions.FuzzyDecontamName),
-        new ExpressionInfo(
-          ExtTableFunctions.getClass.getName,
-          null,
-          ExtTableFunctions.FuzzyDecontamName,
-          "fuzzy_decontaminate(train_table, probe_table[, tau[, n[, maxDf]]]) - " +
-            "containment-based eval-set decontamination ledger (train_id, " +
-            "contaminated, n_probe_matches, best_probe_id, max_containment, action); " +
-            "cached once per (tables, tau, n, maxDf) per session",
-          ""),
-        ExtTableFunctions.fuzzyDecontamBuilder))
-    extensions.injectTableFunction(
-      (
-        FunctionIdentifier(FoldTableFunctions.TopCorrName),
-        new ExpressionInfo(
-          FoldTableFunctions.getClass.getName,
-          null,
-          FoldTableFunctions.TopCorrName,
-          "top_corr_pairs(table, bucketMs[, minBuckets[, nBands[, minBandMatches[, " +
-            "minAbsR]]]]) - sub-quadratic cross-series correlation over a " +
-            "(seriesKey, tsMs, value) relation: sign-sketch band candidates, then " +
-            "exact Pearson r on candidates only",
-          ""),
-        FoldTableFunctions.topCorrBuilder))
+    extensions.injectFunction(GraftFunctions.cosineSim)
+    GraftExtensions.tableFunctions.foreach(extensions.injectTableFunction)
     // whole-operator path: plans graft.plans.KeyedFoldNode (sequential
     // per-key folds) into its physical operator
     extensions.injectPlannerStrategy(_ => graft.plans.KeyedFoldStrategy)
+  }
+}
+
+object GraftExtensions {
+
+  /** One SQL function as both registration paths take it: its name, its
+    * metadata (the usage text `DESCRIBE FUNCTION` prints) and its builder.
+    */
+  type SqlFunction[T] = (FunctionIdentifier, ExpressionInfo, Seq[Expression] => T)
+
+  /** Declares a function of `owner` (the class `DESCRIBE FUNCTION` names). */
+  private[functions] def declare[T](owner: Class[_], name: String, usage: String)(
+      builder: Seq[Expression] => T): SqlFunction[T] =
+    (FunctionIdentifier(name), new ExpressionInfo(owner.getName, null, name, usage, ""), builder)
+
+  /** graft's table-valued functions: the fold detectors, then the
+    * extension operators.
+    */
+  def tableFunctions: Seq[SqlFunction[LogicalPlan]] =
+    FoldTableFunctions.functions ++ ExtTableFunctions.functions
+
+  /** Registers the same functions and planner strategy as the extension
+    * on a live session (including one built without graft's conf).
+    * Idempotent: a repeat call re-registers identical entries.
+    */
+  def install(spark: SparkSession): Unit = {
+    SqlBridge.registerFunction(spark, GraftFunctions.cosineSim)
+    tableFunctions.foreach(SqlBridge.registerTableFunction(spark, _))
+    graft.plans.KeyedFoldPlan.ensureStrategy(spark)
   }
 }

@@ -42,10 +42,11 @@ object KeyedFoldPlan {
 
   /** Idempotently install the strategy into a session's runtime planner —
     * works on ANY session (including the driver's vanilla one), no
-    * config-time extensions required. GraftExtensions also injects it for
-    * the `spark.sql.extensions` path. Synchronized: two threads building
-    * fold queries concurrently must not lose each other's check-then-
-    * append on the experimental-strategies list.
+    * config-time extensions required. `GraftExtensions.install` calls it
+    * for the fold TVFs on a live session; `GraftExtensions` injects the
+    * strategy for the `spark.sql.extensions` path. Synchronized: two
+    * threads building fold queries concurrently must not lose each
+    * other's check-then-append on the experimental-strategies list.
     */
   def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
     val cur = spark.experimental.extraStrategies

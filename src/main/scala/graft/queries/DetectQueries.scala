@@ -278,7 +278,7 @@ object DetectQueries {
     Q(
       "anomaly_sql_surface",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.events(s, dir).createOrReplaceTempView("graft_sql_events")
         s.sql(
           s"""CREATE OR REPLACE TEMPORARY VIEW graft_sql_pts AS
@@ -318,7 +318,7 @@ object DetectQueries {
     Q(
       "anomaly_sql_cusum",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.events(s, dir).createOrReplaceTempView("graft_sqlc_events")
         s.sql(
           s"""CREATE OR REPLACE TEMPORARY VIEW graft_sqlc_pts AS
@@ -362,7 +362,7 @@ object DetectQueries {
     Q(
       "anomaly_sql_hw",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.events(s, dir).createOrReplaceTempView("graft_sqlh_events")
         s.sql(
           s"""CREATE OR REPLACE TEMPORARY VIEW graft_sqlh_pts AS
@@ -670,7 +670,7 @@ object DetectQueries {
     Q(
       "anomaly_sql_esd",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.events(s, dir).createOrReplaceTempView("graft_sqle_events")
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW graft_sqle_pts AS
@@ -955,7 +955,7 @@ object DetectQueries {
     Q(
       "ts_sql_asof",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.events(s, dir)
           .select(col("user_id").as("seriesKey"), col("ts_ms").as("tsMs"), col("value"))
           .createOrReplaceTempView("graft_sqla_pts")

@@ -1730,7 +1730,7 @@ object ExtQueries {
     Q(
       "ext_sql_containment",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sqlct_docs")
         s.sql("SELECT * FROM containment_pairs('graft_sqlct_docs', 0.8)")
       },
@@ -2064,7 +2064,7 @@ object ExtQueries {
     Q(
       "ext_sql_quality",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sql_docs")
         s.sql(
           """WITH q AS (SELECT * FROM quality_lr('graft_sql_docs')),
@@ -2163,7 +2163,7 @@ object ExtQueries {
     Q(
       "ext_sql_triangles",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         copurchaseEdges(s, dir).createOrReplaceTempView("graft_sqltr_edges")
         s.sql("SELECT * FROM triangles('graft_sqltr_edges', 'ua', 'ub')")
       },
@@ -2206,7 +2206,7 @@ object ExtQueries {
     Q(
       "ext_sql_surface",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sql_docs")
         s.sql(
           // explode(array(...)), not `FROM p UNION ALL ... FROM p`: Spark
@@ -2258,7 +2258,7 @@ object ExtQueries {
     Q(
       "ext_sql_clusters",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sql_docs")
         s.sql(
           """WITH c AS (SELECT * FROM dedup_clusters('graft_sql_docs', 0.3))
@@ -2286,7 +2286,7 @@ object ExtQueries {
     Q(
       "ext_sql_excise",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sql_docs")
         s.sql(
           """WITH e AS (SELECT * FROM dedup_excise('graft_sql_docs'))
@@ -2322,7 +2322,7 @@ object ExtQueries {
     Q(
       "ext_sql_xsub",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         Tables.documents(s, dir).createOrReplaceTempView("graft_sql_docs")
         s.sql(
           """SELECT doc_id, n_spans, n_tokens_removed, clean_text
@@ -2335,7 +2335,7 @@ object ExtQueries {
     Q(
       "ext_sql_fuzzy",
       (s, dir) => {
-        graft.functions.ExtTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         val docs = Tables.documents(s, dir)
         docs.where(col("doc_id") >= 20).createOrReplaceTempView("graft_sql_train")
         docs.where(col("doc_id") < 20).createOrReplaceTempView("graft_sql_probe")

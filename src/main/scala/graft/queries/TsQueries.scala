@@ -457,7 +457,7 @@ object TsQueries {
     Q(
       "ts_sql_stl",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         ev(s, dir).createOrReplaceTempView("graft_sqls_events")
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW graft_sqls_pts AS
@@ -535,7 +535,7 @@ object TsQueries {
     Q(
       "ts_sql_topcorr",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         ev(s, dir).where(col("user_id") < 120).createOrReplaceTempView("graft_sqlc_events")
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW graft_sqlc_pts AS
@@ -717,7 +717,7 @@ object TsQueries {
     Q(
       "ts_sql_seasonal",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         ev(s, dir).createOrReplaceTempView("graft_sqlss_events")
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW graft_sqlss_pts AS
@@ -747,7 +747,7 @@ object TsQueries {
     Q(
       "ts_sql_changepoint",
       (s, dir) => {
-        graft.functions.FoldTableFunctions.register(s)
+        graft.functions.GraftExtensions.install(s)
         ev(s, dir).createOrReplaceTempView("graft_sqlc_events")
         s.sql(
           """CREATE OR REPLACE TEMPORARY VIEW graft_sqlc_pts AS

@@ -605,6 +605,7 @@ object Warc {
       // numPartitions round-robin is exempt from coalescing and spreads
       // splits evenly; with more splits than slots each task drains
       // several sequentially
+      // keyless, unlike Dedup's hash-by-id fan-outs (r16): sorting a few-KB table is free
       .repartition(spark.sparkContext.defaultParallelism)
       .as[(String, Long, Long)]
       .mapPartitions { it =>
@@ -702,6 +703,7 @@ object Warc {
       // explicit-numPartitions form is exempt from AQE coalescing, the
       // batch reader's lesson); with fewer spans than slots the
       // round-robin still lands each on its own task
+      // keyless, unlike Dedup's hash-by-id fan-outs (r16): sorting a few-KB table is free
       .repartition(spark.sparkContext.defaultParallelism)
       .mapPartitions { it =>
         val conf = hadoopConfFrom(hprops)

@@ -810,6 +810,19 @@ class ExtSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
   }
 
+  test("triangles: a run that fails throws and leaves no cache entry behind") {
+    import graft.ext.Graph
+    spark.catalog.clearCache()
+    // one edge raises while the result is being filled (a range, not a
+    // local relation, which the optimizer would evaluate while planning)
+    val edges = spark.range(1, 5).select(col("id").as("x"), (col("id") % 4 + 1).as("y"))
+      .withColumn("y", expr("CASE WHEN x = 3 THEN raise_error('bad edge') ELSE y END"))
+    val ex = intercept[Exception](Graph.triangles(edges, "x", "y"))
+    assert(ex.getMessage.contains("bad edge"), ex.getMessage)
+    assert(org.apache.spark.graft.SparkInternals.cacheManagerIsEmpty(spark),
+      "a failed triangles run must release every frame it persisted, the result included")
+  }
+
   test("semanticPairs: verified subset of exact pairs; within-cell recall is total; dups always pair") {
     val e = Tables.embeddings(spark, sf)
     val idx = Similarity.buildIvfIndex(e, "vec_id", "embedding")
@@ -1701,6 +1714,42 @@ class ExtSpec extends AnyFunSuite {
     }
   }
 
+  test("one registry: the extension and install register every SQL function with the same usage") {
+    import graft.functions.GraftExtensions
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val base = spark
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val injected =
+      try SparkSession.builder().withExtensions(new GraftExtensions).getOrCreate()
+      finally { SparkSession.setDefaultSession(base); SparkSession.setActiveSession(base) }
+    val installed = base.newSession() // a plain session: no extensions
+    GraftExtensions.install(installed)
+    GraftExtensions.install(installed) // idempotent
+    assert(installed.experimental.extraStrategies.count(_ == graft.plans.KeyedFoldStrategy) == 1)
+
+    // the README's SQL surface: 22 TVFs plus the scalar cosine_sim
+    val readme = Set(
+      "exp_avg_fold", "derivative_fold", "holt_fold", "hw_fold", "cusum_fold", "esd_outliers",
+      "changepoint", "asof_join", "top_corr_pairs", "stl_decompose", "seasonal_strength",
+      "minhash_pairs", "ppjoin_pairs", "tfidf_topk", "quality_lr", "kmv_overlap",
+      "dedup_clusters", "dedup_excise", "containment_pairs", "triangles",
+      "exact_substring_excise", "fuzzy_decontaminate")
+    val tvfs = GraftExtensions.tableFunctions.map(_._1.funcName)
+    assert(tvfs.size == 22 && tvfs.toSet == readme)
+
+    def catalog(s: SparkSession) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.catalog
+    def info(s: SparkSession, name: String) =
+      if (name == "cosine_sim") catalog(s).lookupFunctionInfo(FunctionIdentifier(name))
+      else catalog(s).lookupBuiltinOrTempTableFunction(name).getOrElse(fail(s"$name is not registered"))
+    (tvfs :+ "cosine_sim").foreach { name =>
+      val (a, b) = (info(injected, name), info(installed, name))
+      assert(a.getUsage != null && a.getUsage.startsWith(s"$name("), s"$name usage: ${a.getUsage}")
+      assert((a.getClassName, a.getName, a.getUsage) == (b.getClassName, b.getName, b.getUsage), name)
+    }
+  }
+
   test("native cosine_sim expression matches the lambda formulation bit-for-bit, incl. SQL form") {
     import graft.functions.GraftFunctions
     val e = Similarity.prepared(Tables.embeddings(spark, sf), "vec_id", "embedding").limit(50)
@@ -1711,7 +1760,7 @@ class ExtSpec extends AnyFunSuite {
     val diffs = pairs.where(col("c_expr") =!= col("c_lambda")).count()
     assert(diffs == 0, s"$diffs pairs differ between expression and lambda cosine")
 
-    GraftFunctions.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     e.select(col("vec").as("v")).createOrReplaceTempView("cosine_probe")
     val n = spark.sql("SELECT cosine_sim(a.v, b.v) c FROM cosine_probe a, cosine_probe b").count()
     assert(n == 2500)

@@ -70,7 +70,7 @@ class FoldPlanSpec extends AnyFunSuite {
   }
 
   test("exp_avg_fold TVF from pure SQL equals the Scala fold and plans through KeyedFoldExec") {
-    graft.functions.FoldTableFunctions.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     pts.toDF().createOrReplaceTempView("fold_tvf_pts")
     val sqlDf = spark.sql("SELECT * FROM exp_avg_fold('fold_tvf_pts', 0.2)")
     val p = plan(sqlDf)
@@ -84,7 +84,7 @@ class FoldPlanSpec extends AnyFunSuite {
   }
 
   test("derivative_fold TVF defaults alpha and rejects non-literal args") {
-    graft.functions.FoldTableFunctions.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     pts.toDF().createOrReplaceTempView("fold_tvf_pts")
     val withDefault = spark.sql("SELECT * FROM derivative_fold('fold_tvf_pts')")
     val explicit = spark.sql("SELECT * FROM derivative_fold('fold_tvf_pts', 0.2)")
@@ -96,7 +96,7 @@ class FoldPlanSpec extends AnyFunSuite {
   }
 
   test("holt_fold and cusum_fold TVFs equal their Scala kernels and plan through KeyedFoldExec") {
-    graft.functions.FoldTableFunctions.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     import spark.implicits._
     pts.toDF().createOrReplaceTempView("fold_tvf_pts")
     // holt: plain (seriesKey, tsMs, value) relation
@@ -125,7 +125,7 @@ class FoldPlanSpec extends AnyFunSuite {
   }
 
   test("hw_fold TVF equals the Holt-Winters kernel, defaults every factor, plans through KeyedFoldExec") {
-    graft.functions.FoldTableFunctions.register(spark)
+    graft.functions.GraftExtensions.install(spark)
     pts.toDF().createOrReplaceTempView("fold_tvf_hw_pts")
     val viaSql = spark.sql("SELECT * FROM hw_fold('fold_tvf_hw_pts')")
     assert(plan(viaSql).contains("KeyedFold "))
