@@ -19,6 +19,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     so check_bench.py can normalize per-SEGMENT instead of per-run —
   *     a load burst that hits minutes 3-4 of the run shows up in the
   *     sentinels bracketing exactly the rows it inflated.
+  *
+  * A row whose run throws gets no time: it is left out of "queries" and
+  * listed with its error under "failed", which check_bench.py rejects.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -60,16 +63,23 @@ object Bench {
     }
     spark.catalog.clearCache(); System.gc()
 
-    def median3(fn: (SparkSession, String) => DataFrame): Double = {
-      val times = (1 to 3).map { _ =>
+    /** Median of three timed runs, or the error of the first run that
+      * throws: a failed run yields no time, so a failing row cannot read
+      * as a fast one. */
+    def median3(fn: (SparkSession, String) => DataFrame): Either[String, Double] = {
+      val times = scala.collection.mutable.ArrayBuffer[Double]()
+      var error: Option[String] = None
+      while (error.isEmpty && times.size < 3) {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
+        try {
+          fn(spark, sfDir).count()
+          times += (System.nanoTime() - t0) / 1e9
+        } catch { case e: Throwable => error = Some(e.toString) }
+      }
       // isolate queries from each other's leftover broadcasts/shuffle state
       spark.catalog.clearCache()
       System.gc()
-      times(1)
+      error.toLeft(times.sorted.apply(1))
     }
 
     // ambient sentinels: one CPU-segment row (q1_agg) plus one IO-light
@@ -89,7 +99,7 @@ object Bench {
     val sentinelFns = SentinelNames.flatMap(n => SparkEntry.queries.get(n).map(n -> _))
     val sentinels = scala.collection.mutable.ArrayBuffer[(String, Int, Int, Double)]()
     def sentinel(pass: Int, at: Int): Unit = sentinelFns.foreach { case (n, fn) =>
-      sentinels += ((n, pass, at, median3(fn)))
+      median3(fn).foreach(t => sentinels += ((n, pass, at, t)))
     }
 
     // one untimed sentinel run first: the post-warm clearCache+GC leaves
@@ -99,7 +109,7 @@ object Bench {
       try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
     sentinel(1, 0)
-    val window1: Seq[(String, Double)] = ordered.zipWithIndex.map { case ((name, fn), i) =>
+    val window1: Seq[(String, Either[String, Double])] = ordered.zipWithIndex.map { case ((name, fn), i) =>
       val t = median3(fn)
       if ((i + 1) % SentinelEvery == 0 && i + 1 < ordered.size) sentinel(1, i + 1)
       name -> t
@@ -112,12 +122,13 @@ object Bench {
     // of 230 rows on a 2.2x-loaded run; median-normalized it re-measures
     // only the rows that moved relative to everything else.
     val ReMeasureFactor = 1.5
-    val ratios = window1.flatMap { case (n, t) => anchors.get(n).map(a => t / a) }.sorted
+    val timed1 = window1.collect { case (n, Right(t)) => n -> t }
+    val ratios = timed1.flatMap { case (n, t) => anchors.get(n).map(a => t / a) }.sorted
     val runMedian = if (ratios.isEmpty) 1.0 else ratios(ratios.size / 2)
-    val violators = window1.filter { case (n, t) =>
+    val violators = timed1.filter { case (n, t) =>
       anchors.get(n).exists(a => t / a > runMedian * ReMeasureFactor)
     }
-    val window2: Seq[(String, Double)] =
+    val window2: Seq[(String, Either[String, Double])] =
       if (violators.isEmpty) Seq.empty
       else {
         sentinel(2, 0)
@@ -130,19 +141,28 @@ object Bench {
         m
       }
     val w2 = window2.toMap
-    val results = window1.map { case (n, t) => n -> math.min(t, w2.getOrElse(n, t)) }
+    // a row is timed only if every window it ran in succeeded
+    val measured = window1.map { case (n, r) =>
+      n -> w2.get(n).fold(r)(r2 => for (a <- r; b <- r2) yield math.min(a, b))
+    }
+    val results = measured.collect { case (n, Right(t)) => n -> t }
+    val failed = measured.collect { case (n, Left(e)) => n -> e }
 
+    def quote(v: String) = org.json4s.jackson.JsonMethods.compact(org.json4s.JString(v))
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val windowsJson = window1.filter { case (n, _) => w2.contains(n) }
-      .map { case (n, t1) => s"\"" + n + "\":[" + t1 + "," + w2(n) + "]" }
+    val failedJson = failed.map { case (k, e) => s"\"" + k + "\":" + quote(e) }
+      .mkString("{", ",", "}")
+    val windowsJson = window1.collect { case (n, Right(t1)) if w2.get(n).exists(_.isRight) =>
+        s"\"" + n + "\":[" + t1 + "," + w2(n).toOption.get + "]"
+      }
       .mkString("{", ",", "}")
     val sentinelJson = sentinels
       .map { case (n, p, at, t) => s"""{"q":"$n","pass":$p,"at":$at,"sec":$t}""" }
       .mkString("[", ",", "]")
     val sentinelQs = SentinelNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,""" +
       s""""windows":$windowsJson,"sentinel":$sentinelJson,"sentinel_q":"$SentinelName",""" +
       s""""sentinel_qs":$sentinelQs,"sf":"$sfDir"}"""
     println(line)

@@ -35,6 +35,25 @@ object Tables {
     }
   }
 
+  /** Every file under `path` as (path, length, modification time), sorted;
+    * None when the path does not exist. The identity of a file-backed
+    * input: what the schema catalog and the artifact cache key on.
+    */
+  private[graft] def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val files = Seq.newBuilder[(String, Long, Long)]
+      val it = fs.listFiles(p, true)
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    }
+  }
+
   /** Session-scoped inferred schemas, one per table path, each valid for
     * the file listing (and inference conf) it was inferred under.
     */
@@ -49,20 +68,8 @@ object Tables {
     private val bySession = java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, Map[String, (Fingerprint, StructType)]])
 
-    def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] = {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val files = Seq.newBuilder[(String, Long, Long)]
-        val it = fs.listFiles(p, true)
-        while (it.hasNext) {
-          val f = it.next()
-          files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-        }
-        Some((files.result().sorted, InferenceConf.map(spark.conf.getOption)))
-      }
-    }
+    def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] =
+      listing(spark, path).map(files => (files, InferenceConf.map(spark.conf.getOption)))
 
     def lookup(spark: SparkSession, path: String, fp: Fingerprint): Option[StructType] =
       Option(bySession.get(spark)).flatMap(_.get(path)).collect { case (f, schema) if f == fp => schema }

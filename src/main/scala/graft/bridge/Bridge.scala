@@ -17,6 +17,10 @@ object SqlBridge {
     org.apache.spark.sql.graft.SqlBridgeImpl.ofRows(spark, plan)
   def persistRows(ds: Dataset[_]): DataFrame =
     org.apache.spark.sql.graft.SqlBridgeImpl.persistRows(ds)
+  def persistedRowCount(df: Dataset[_]): Long =
+    org.apache.spark.sql.graft.SqlBridgeImpl.persistedRowCount(df)
+  def releaseRows(df: Dataset[_]): Unit =
+    org.apache.spark.sql.graft.SqlBridgeImpl.releaseRows(df)
   def analyzedPlan(df: Dataset[_]): LogicalPlan =
     org.apache.spark.sql.graft.SqlBridgeImpl.analyzedPlan(df)
 }

@@ -33,19 +33,22 @@ object SqlBridgeImpl {
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Runs `ds` once, keeps its rows in an RDD persisted in memory
-    * (spilling to disk), and returns a DataFrame over that RDD: how rows
-    * that several consumers read are computed once. It is
-    * `Dataset.localCheckpoint`'s shape with the lineage kept, so a lost
-    * block is recomputed from `ds`'s plan. Nothing is registered with the
-    * session's CacheManager (which would hold a `Dataset.persist` until
-    * someone unpersists it); Spark's ContextCleaner unpersists the RDD
-    * once the returned DataFrame (and everything planned from it) is
+    * (spilling to disk), and returns a DataFrame over that RDD: graft's one
+    * rule for rows that several consumers read. It is
+    * `Dataset.localCheckpoint`'s shape with the lineage kept, so a lost or
+    * released block is recomputed from `ds`'s plan. Nothing is registered
+    * with the session's CacheManager (which would hold a `Dataset.persist`
+    * until someone unpersists it); Spark's ContextCleaner unpersists the
+    * RDD once the returned DataFrame (and everything planned from it) is
     * unreachable — at the first driver GC after that, since the cleaner
     * tracks weak references (its periodic GC,
     * `spark.cleaner.periodicGC.interval`, defaults to 30 min). The run is
-    * one SQL execution, so query listeners see its plan and metrics. Like
-    * a cached relation, the result is planned with its real row count
-    * rather than the input's estimate, so small results still broadcast.
+    * one SQL execution, so query listeners see its plan and metrics, and
+    * metrics `ds` observes (`Dataset.observe`) are filled by it. Like a
+    * cached relation, the result is planned with its real row count
+    * rather than the input's estimate, so small results still broadcast;
+    * [[persistedRowCount]] reads that count, and [[releaseRows]] frees the
+    * storage early where a loop supersedes its own copies.
     */
   def persistRows(ds: Dataset[_]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeSet
@@ -76,6 +79,24 @@ object SqlBridgeImpl {
       cds.sparkSession,
       LogicalRDD(lr.output, rows, partitioning, lr.outputOrdering, lr.isStreaming)(cds.sparkSession, Some(stats), None))
   }
+
+  /** The row count [[persistRows]] took while materializing `df` (no job). */
+  def persistedRowCount(df: Dataset[_]): Long = persistedRdd(df).computeStats().rowCount match {
+    case Some(n) => n.toLong
+    case None => throw new IllegalArgumentException("persistedRowCount: the frame carries no row count")
+  }
+
+  /** Unpersists the rows behind a [[persistRows]] frame now instead of at
+    * ContextCleaner's next pass. Lineage is kept, so a later read of the
+    * frame recomputes rather than fails.
+    */
+  def releaseRows(df: Dataset[_]): Unit = persistedRdd(df).rdd.unpersist(blocking = false): Unit
+
+  private def persistedRdd(df: Dataset[_]): org.apache.spark.sql.execution.LogicalRDD =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr
+      case p => throw new IllegalArgumentException(s"not a persistRows frame: ${p.nodeName}")
+    }
 
   /** Analyzed LogicalPlan of a Dataset (to embed as a custom node's child). */
   def analyzedPlan(df: Dataset[_]): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.bridge.SqlBridge.{persistRows, persistedRowCount, releaseRows}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,6 +16,14 @@ import org.apache.spark.sql.functions._
   *
   * All hashing is md5-based (identical on Spark and DuckDB) so every stage
   * can be oracle-checked in SQL.
+  *
+  * Intermediates: a table that several branches of a kernel's plan read
+  * (the shingle-hash sets, the signature table, the chunk table) is
+  * materialized once with `SqlBridge.persistRows` while the frame is
+  * built. Nothing enters the CacheManager; ContextCleaner releases the
+  * rows once the returned frame is unreachable, and a lost block
+  * recomputes from lineage. So every function here returns a plain
+  * frame: there is no scope to enter and nothing to unpersist.
   */
 object Dedup {
 
@@ -134,10 +143,9 @@ object Dedup {
     * engines (same collision behavior), computed once per unordered
     * pair and fanned to the two directed rows.
     *
-    * Persist contract: the shingle-hash table stays persisted for the
-    * session (the result plan reads it from two branches). Callers that
-    * consume the frame once should use [[withContainmentPairs]], which
-    * releases it on exit.
+    * The shingle-hash table, which the result plan reads from several
+    * branches, is materialized when the frame is built (the object's
+    * intermediates rule).
     */
   def containmentPairs(
       df: DataFrame,
@@ -147,47 +155,7 @@ object Dedup {
       tau: Double,
       minShingles: Int = 8,
       maxDf: Int = 100000): DataFrame =
-    containmentBuild(df, idCol, textCol, n, tau, minShingles, maxDf)._2
-
-  /** Leak-free scope for `containmentPairs` — same contract as
-    * `withPpjoinPairs`: `use` must materialize the frame; the internal
-    * hash-set persist is released when it returns.
-    */
-  def withContainmentPairs[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      tau: Double,
-      minShingles: Int = 8,
-      maxDf: Int = 100000)(use: DataFrame => T): T = {
-    val (hashed, out) = containmentBuild(df, idCol, textCol, n, tau, minShingles, maxDf)
-    try use(out)
-    finally hashed.unpersist(blocking = false)
-  }
-
-  /** The containment pipeline. Candidate generation uses the ASYMMETRIC
-    * prefix filter — the PPJoin argument adapted to containment: if
-    * C(A→B) = i/na ≥ τ then i ≥ ⌈τ·na⌉, so A∩B must touch A's
-    * rarest-first prefix of length na − ⌈τ·na⌉ + 1 (missing all of it
-    * bounds i ≤ ⌈τ·na⌉ − 1). LOSSLESS, so the oracle stays the naive
-    * full shingle join; only A's ~(1−τ) rarest shingles enter the join
-    * (the B side joins its full set — containment has no symmetric
-    * shrink), plus the length bound nb ≥ ⌈τ·na⌉. Exact intersections are
-    * in-row sorted-array intersects on the surviving candidates, never a
-    * token-level pair explosion.
-    */
-  private def containmentBuild(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      tau: Double,
-      minShingles: Int,
-      maxDf: Int): (DataFrame, DataFrame) = {
-    val st = containmentStages(df, idCol, textCol, n, tau, minShingles, maxDf)
-    (st.hashed, st.out)
-  }
+    containmentStages(df, idCol, textCol, n, tau, minShingles, maxDf).out
 
   /** Candidate-funnel counts for `containmentPairs` — the pruning
     * evidence (kept shingle rows vs prefix rows vs candidates vs
@@ -202,17 +170,15 @@ object Dedup {
       tau: Double,
       minShingles: Int = 8,
       maxDf: Int = 100000): Map[String, Long] = {
-    val docs = df.count()
     val st = containmentStages(df, idCol, textCol, n, tau, minShingles, maxDf)
-    try {
-      Map(
-        "docs" -> docs,
-        "all_pairs" -> docs * (docs - 1) / 2,
-        "kept_shingle_rows" -> st.khf.count(),
-        "prefix_rows" -> st.prefix.count(),
-        "candidates" -> st.cand.count(),
-        "verified_rows" -> st.out.count())
-    } finally st.hashed.unpersist()
+    val docs = persistedRowCount(st.hashed)
+    Map(
+      "docs" -> docs,
+      "all_pairs" -> docs * (docs - 1) / 2,
+      "kept_shingle_rows" -> st.khf.count(),
+      "prefix_rows" -> st.prefix.count(),
+      "candidates" -> st.cand.count(),
+      "verified_rows" -> st.out.count())
   }
 
   /** Fuzzy (containment-based) eval-set decontamination — the near-dup
@@ -253,15 +219,11 @@ object Dedup {
     require(tau > 0.0 && tau <= 1.0, s"tau must be in (0,1], got $tau")
     require(minShingles >= 1, s"minShingles must be >= 1, got $minShingles")
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
-    // persist contract (same as containmentPairs): the md5 shingle
-    // kernel feeds the df-count union, both kept sides, the prefix and
-    // both verify arrays — ~7 consumers that would each re-tokenize the
-    // corpus. Session-persisted; LRU owns eviction (recompute is
-    // deterministic).
-    val ht = shingledSets(train, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hp = shingledSets(probe, idCol, textCol, n)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialized once each: the md5 shingle kernel feeds the df-count
+    // union, both kept sides, the prefix and both verify arrays — ~7
+    // consumers that would each re-tokenize the corpus
+    val ht = persistRows(shingledSets(train, idCol, textCol, n))
+    val hp = persistRows(shingledSets(probe, idCol, textCol, n))
     val shT = ht.select(col("id"), explode(col("hs")).as("h"))
     val shP = hp.select(col("id"), explode(col("hs")).as("h"))
     // boilerplate cap over BOTH sides: a navigation shingle common to
@@ -362,6 +324,18 @@ object Dedup {
       cand: DataFrame,
       out: DataFrame)
 
+  /** The containment pipeline, shared by `containmentPairs` and
+    * `containmentFunnel`. Candidate generation uses the ASYMMETRIC
+    * prefix filter — the PPJoin argument adapted to containment: if
+    * C(A→B) = i/na ≥ τ then i ≥ ⌈τ·na⌉, so A∩B must touch A's
+    * rarest-first prefix of length na − ⌈τ·na⌉ + 1 (missing all of it
+    * bounds i ≤ ⌈τ·na⌉ − 1). LOSSLESS, so the oracle stays the naive
+    * full shingle join; only A's ~(1−τ) rarest shingles enter the join
+    * (the B side joins its full set — containment has no symmetric
+    * shrink), plus the length bound nb ≥ ⌈τ·na⌉. Exact intersections are
+    * in-row sorted-array intersects on the surviving candidates, never a
+    * token-level pair explosion.
+    */
   private def containmentStages(
       df: DataFrame,
       idCol: String,
@@ -375,9 +349,9 @@ object Dedup {
     require(maxDf >= 2, s"maxDf must be >= 2, got $maxDf")
     val spark = df.sparkSession
     import spark.implicits._
-    // persisted once: the md5 kernel feeds the df-count, prefix, candidate
-    // and both verify branches (the ppjoinCandidates pattern)
-    val hashed = df
+    // materialized once: the md5 kernel feeds the df-count, prefix,
+    // candidate and both verify branches (the ppjoinStages pattern)
+    val hashed = persistRows(df
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .repartition(spark.sparkContext.defaultParallelism, col("id"))
       .as[(Long, String)]
@@ -387,8 +361,7 @@ object Dedup {
           (id, sortedDistinctShingleHash32(md, tokenBytes(text), n))
         }
       }
-      .toDF("id", "hs")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("id", "hs"))
     val sh = hashed.select(col("id"), explode(col("hs")).as("h"))
     // document frequency drives BOTH the boilerplate cap and the
     // rarest-first prefix ordering
@@ -619,26 +592,28 @@ object Dedup {
     * `ngramJaccardPairs` unblocked at the same τ (spec-pinned): same
     * pairs, same scores.
     */
-  /** The shared PPJoin pipeline stages: the persisted sorted-hash-set
-    * table, the rarest-first prefix rows, and the length-filtered
-    * candidate pairs — ONE definition consumed by both `ppjoinPairs` and
-    * `ppjoinFunnel` so the funnel's counts can never drift from the
-    * production path (the minhash twin shares `shingleHashesAndSig` /
-    * `bandedKeys` for the same reason).
+  /** The shared PPJoin pipeline stages: the materialized sorted-hash-set
+    * table, the rarest-first prefix rows, the length-filtered candidate
+    * pairs and the verified pairs — ONE definition consumed by both
+    * `ppjoinPairs` and `ppjoinFunnel` so the funnel's counts can never
+    * drift from the production path (the minhash twin shares
+    * `shingleHashesAndSig` / `bandedKeys` for the same reason).
     */
-  private def ppjoinCandidates(
+  private final case class PpjoinStages(hashed: DataFrame, prefix: DataFrame, cand: DataFrame, out: DataFrame)
+
+  private def ppjoinStages(
       df: DataFrame,
       idCol: String,
       textCol: String,
       n: Int,
-      tau: Double): (DataFrame, DataFrame, DataFrame) = {
+      tau: Double): PpjoinStages = {
     require(tau > 0.0 && tau < 1.0, s"tau must be in (0,1), got $tau")
     val spark = df.sparkSession
     import spark.implicits._
-    // persisted once: the hash pass feeds four consumers (df counts,
-    // prefix build, and both verify sides) — without the persist the
-    // md5 kernel recomputes per branch
-    val hashed = df
+    // materialized once: the hash pass feeds four consumers (df counts,
+    // prefix build, and both verify sides) — otherwise the md5 kernel
+    // recomputes per branch
+    val hashed = persistRows(df
       .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
       .repartition(spark.sparkContext.defaultParallelism, col("id"))
       .as[(Long, String)]
@@ -648,8 +623,7 @@ object Dedup {
           (id, sortedDistinctShingleHash32(md, tokenBytes(text), n))
         }
       }
-      .toDF("id", "hs")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .toDF("id", "hs"))
     val sh = hashed.select(col("id"), explode(col("hs")).as("h"))
     val dfh = sh.groupBy(col("h")).agg(count(lit(1)).as("dfh"))
     val byRarity = Window.partitionBy(col("id")).orderBy(col("dfh"), col("h"))
@@ -687,68 +661,42 @@ object Dedup {
       .agg(min(col("ra")).as("ra"), min(col("rb")).as("rb"))
       .where(posU.cast("double") / (col("na") + col("nb") - posU) >= tau)
       .select(col("da"), col("db"), col("na"), col("nb"))
-    (hashed, prefix, cand)
-  }
-
-  /** LAZY form: the returned frame keeps the internal hash-set table
-    * persisted for the session (it must outlive every consumer of the
-    * lazy frame, and a lazy API has no release point) — an interactive
-    * LRU-cache contract. Bounded pipelines (write-to-parquet, count,
-    * artifact builds) should use `withPpjoinPairs`, which releases the
-    * cache the moment the caller's materialization returns.
-    */
-  def ppjoinPairs(df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double): DataFrame = {
-    val (hashed, _, cand) = ppjoinCandidates(df, idCol, textCol, n, tau)
-    ppjoinVerify(hashed, cand, tau)
-  }
-
-  /** Leak-free scope for `ppjoinPairs`: hands the pair frame to `use`
-    * (which must MATERIALIZE it — write, count, collect) and unpersists
-    * the internal hash-set table when `use` returns, the same try/finally
-    * contract as `ppjoinFunnel`. Reading the frame after the scope closes
-    * re-runs the md5 kernel per consumer — materialize inside.
-    */
-  def withPpjoinPairs[T](df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double)(
-      use: DataFrame => T): T = {
-    val (hashed, _, cand) = ppjoinCandidates(df, idCol, textCol, n, tau)
-    try use(ppjoinVerify(hashed, cand, tau))
-    finally hashed.unpersist(blocking = false)
-  }
-
-  /** verify = in-row sorted-array intersection on the surviving
-    * candidates (late materialization of the hash sets; no token-level
-    * join explosion). Shared by `ppjoinPairs` and `ppjoinFunnel` so the
-    * funnel never rebuilds the hash/df/prefix pipeline a second time.
-    */
-  private def ppjoinVerify(hashed: DataFrame, cand: DataFrame, tau: Double): DataFrame =
-    cand
+    // verify = in-row sorted-array intersection on the surviving
+    // candidates (late materialization of the hash sets; no token-level
+    // join explosion)
+    val out = cand
       .join(hashed.select(col("id").as("da"), col("hs").as("hsa")), "da")
       .join(hashed.select(col("id").as("db"), col("hs").as("hsb")), "db")
       .withColumn("i", size(array_intersect(col("hsa"), col("hsb"))).cast("long"))
       .withColumn("jaccard", col("i").cast("double") / (col("na") + col("nb") - col("i")))
       .where(col("jaccard") >= tau)
       .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
+    PpjoinStages(hashed, prefix, cand, out)
+  }
+
+  /** The hash-set table is materialized when the frame is built (the
+    * object's intermediates rule); the rest of the plan runs at the
+    * caller's first action.
+    */
+  def ppjoinPairs(df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double): DataFrame =
+    ppjoinStages(df, idCol, textCol, n, tau).out
 
   /** Candidate-funnel counts for `ppjoinPairs` — the pruning evidence
     * BENCH_NOTES tables are built from (all-pairs vs prefix candidates
     * vs verified). Shares the exact candidate pipeline with the
-    * production path via `ppjoinCandidates`.
+    * production path via `ppjoinStages`.
     */
   def ppjoinFunnel(df: DataFrame, idCol: String, textCol: String, n: Int, tau: Double): Map[String, Long] = {
-    val docs = df.count()
-    // one candidate build feeds every count (the old shape ran the whole
-    // hash/df/prefix pipeline twice and leaked a persisted `hashed` per
-    // invocation); the funnel materializes everything, so the persist can
-    // be released before returning
-    val (hashed, prefix, cand) = ppjoinCandidates(df, idCol, textCol, n, tau)
-    try {
-      Map(
-        "docs" -> docs,
-        "all_pairs" -> docs * (docs - 1) / 2,
-        "prefix_rows" -> prefix.count(),
-        "candidates" -> cand.count(),
-        "verified_pairs" -> ppjoinVerify(hashed, cand, tau).count())
-    } finally hashed.unpersist()
+    // one candidate build feeds every count, and its materializing run
+    // counts the documents
+    val st = ppjoinStages(df, idCol, textCol, n, tau)
+    val docs = persistedRowCount(st.hashed)
+    Map(
+      "docs" -> docs,
+      "all_pairs" -> docs * (docs - 1) / 2,
+      "prefix_rows" -> st.prefix.count(),
+      "candidates" -> st.cand.count(),
+      "verified_pairs" -> st.out.count())
   }
 
   private val HashP = 2147483647L // 2^31 − 1
@@ -968,15 +916,13 @@ object Dedup {
     val rows = perms / bands
     // the signature table (id + hashes + sig, ~1 KB/doc at any scale) is
     // consumed four times below (bucket sizes, both candidate sides, the
-    // verify sets) — materialize it once, the standard minhash practice
-    val docs = shingleHashesAndSig(
-      df.repartition(spark.sparkContext.defaultParallelism, col(idCol)), idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Force the persist before the fan-out: otherwise the four consumers
-    // race to compute the same partitions concurrently (observed as
-    // "Block rdd_* already exists" churn and a >10× wall-time blowup).
-    val nDocs = docs.count()
-    val cap = if (maxBucket > 0) maxBucket else maxBucketFor(nDocs)
+    // verify sets) — materialize it once, the standard minhash practice,
+    // and before the fan-out: otherwise the four consumers race to compute
+    // the same partitions concurrently (observed as "Block rdd_* already
+    // exists" churn and a >10× wall-time blowup)
+    val docs = persistRows(shingleHashesAndSig(
+      df.repartition(spark.sparkContext.defaultParallelism, col(idCol)), idCol, textCol, n, perms))
+    val cap = if (maxBucket > 0) maxBucket else maxBucketFor(persistedRowCount(docs))
     val banded = bandedKeys(docs, bands, rows)
     // frequent-bucket skip: a band bucket holding > maxBucket docs is a
     // collision artifact and would contribute O(bucket²) candidate pairs —
@@ -1023,26 +969,23 @@ object Dedup {
       maxBucket: Int = 0): Map[String, Long] = {
     val spark = df.sparkSession
     val rows = perms / bands
-    val docs = shingleHashesAndSig(
-      df.repartition(spark.sparkContext.defaultParallelism, col(idCol)), idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nDocs = docs.count()
+    val docs = persistRows(shingleHashesAndSig(
+      df.repartition(spark.sparkContext.defaultParallelism, col(idCol)), idCol, textCol, n, perms))
+    val nDocs = persistedRowCount(docs)
     val cap = if (maxBucket > 0) maxBucket else maxBucketFor(nDocs)
     val banded = bandedKeys(docs, bands, rows)
-    val sizes = banded.groupBy("band", "key").agg(count(lit(1)).as("_c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nBuckets = sizes.count()
+    val sizes = persistRows(banded.groupBy("band", "key").agg(count(lit(1)).as("_c")))
+    val nBuckets = persistedRowCount(sizes)
     val nMulti = sizes.where(col("_c") > 1).count()
     val nCapped = sizes.where(col("_c") > cap).count()
     val small = sizes.where(col("_c") <= cap && col("_c") > 1).select("band", "key")
     val kept = banded.join(small, Seq("band", "key"), "left_semi")
-    val candidates = kept.as("a")
+    val candidates = persistRows(kept.as("a")
       .join(kept.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") && col("a.id") < col("b.id"))
       .select(col("a.id").as("da"), col("b.id").as("db"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nCand = candidates.count()
+      .distinct())
+    val nCand = persistedRowCount(candidates)
     val sets = docs.select(col("id"), col("hs"))
     val nVerified = candidates
       .join(sets.select(col("id").as("da"), col("hs").as("sha")), "da")
@@ -1051,9 +994,6 @@ object Dedup {
       .withColumn("jaccard", col("i").cast("double") / (size(col("sha")) + size(col("shb")) - col("i")))
       .where(col("jaccard") >= tau)
       .count()
-    candidates.unpersist(blocking = false)
-    sizes.unpersist(blocking = false)
-    docs.unpersist(blocking = false)
     Map(
       "n_docs" -> nDocs,
       "max_bucket" -> cap.toLong,
@@ -1093,9 +1033,9 @@ object Dedup {
     clustersWithRounds(pairs, aCol, bCol, maxIter)._1
 
   /** `clusters` plus the number of propagation rounds it ran — the loop
-    * is eager (one labelSum action per round), so the count is exact at
-    * return. Scale probes assert the ~log(diameter) round bound here
-    * instead of inferring it from wall time.
+    * is eager (each round's label table is materialized), so the count is
+    * exact at return. Scale probes assert the ~log(diameter) round bound
+    * here instead of inferring it from wall time.
     */
   def clustersWithRounds(
       pairs: DataFrame,
@@ -1106,33 +1046,24 @@ object Dedup {
     // keeps the FULL logical plan (the whole MinHash DAG under `pairs`,
     // plus one join-tree layer per round), and Catalyst re-analyzes and
     // re-optimizes that ever-deeper tree each round — measured seconds of
-    // driver time per round on a 500-node graph. Rebuilding each round's
-    // result as a fresh DataFrame over its materialized RDD gives every
-    // iteration a flat plan with brand-new attributes (localCheckpoint
-    // alone trips Union constraint rewriting when the same checkpointed
-    // lineage feeds both union branches). On a real cluster swap the
-    // cache for reliable checkpoint() to the cluster FS — same shape.
-    val spark = pairs.sparkSession
-    def materialize(df: DataFrame): (DataFrame, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]) = {
-      val rdd = df.rdd
-      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (spark.createDataFrame(rdd, df.schema), rdd)
+    // driver time per round on a 500-node graph. `persistRows` gives every
+    // iteration a flat plan over the rows it materialized. On a real
+    // cluster swap it for reliable checkpoint() to the cluster FS — same
+    // shape.
+    val p = persistRows(pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
+    val edges = persistRows(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
+    // exact decimal sum of labels, observed on the run that materializes
+    // the label table: labels only ever DECREASE, so an unchanged sum ⇔ a
+    // fixpoint — convergence costs no job of its own. sum() over zero rows
+    // is SQL NULL (an empty pair graph — no near-dups found upstream);
+    // it reads as 0 so that case converges to the empty result.
+    def withLabelSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+      val obs = org.apache.spark.sql.Observation()
+      val m = persistRows(df.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s")))
+      (m, Option(obs.get("s")).fold(java.math.BigDecimal.ZERO)(_.asInstanceOf[java.math.BigDecimal]))
     }
-    val (p, pRdd) = materialize(
-      pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    val (edges, edgesRdd) = materialize(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
-    var (labels, labelsRdd) = materialize(
+    var (labels, prevSum) = withLabelSum(
       edges.select(col("src").as("id")).distinct().withColumn("label", col("id")))
-    // exact decimal sum of labels: labels only ever DECREASE, so an
-    // unchanged sum ⇔ a fixpoint — convergence costs one aggregate over
-    // the checkpointed label table instead of a join + count per round.
-    // sum() over zero rows is SQL NULL (an empty pair graph — no near-dups
-    // found upstream); coalesce to 0 so that case converges to the empty
-    // result instead of NPEing on getDecimal.
-    def labelSum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(sum(col("label").cast("decimal(38,0)"))).head.getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1140,9 +1071,9 @@ object Dedup {
       val offered = edges.join(labels, col("src") === col("id"))
         .select(col("dst").as("id"), col("label"))
       // materialize BEFORE the self-join: flat lineage, and both join
-      // sides read the same cached partitions instead of recomputing the
+      // sides read the same partitions instead of recomputing the
       // aggregation twice
-      val (viaNeighbors, viaRdd) = materialize(
+      val viaNeighbors = persistRows(
         labels.select("id", "label").union(offered)
           .groupBy("id").agg(min("label").as("label")))
       // path halving: follow one's label to ITS label (labels are node
@@ -1154,23 +1085,21 @@ object Dedup {
           col("x.label") === col("lid"),
           "left")
         .select(col("x.id").as("id"), coalesce(col("llabel"), col("x.label")).as("label"))
-      val (nextM, nextRdd) = materialize(next)
-      val s = labelSum(nextM) // one job: computes, caches, and sums the round
-      // the new round is fully materialized — release the storage of the
-      // rounds it supersedes (long-lived sessions would otherwise
-      // accumulate ~2 persisted RDDs per iteration until ContextCleaner GC)
-      viaRdd.unpersist(blocking = false)
-      labelsRdd.unpersist(blocking = false)
+      val (nextM, s) = withLabelSum(next)
+      // the new round is materialized — release the storage of the
+      // rounds it supersedes now (a long loop would otherwise hold ~2
+      // copies per round until ContextCleaner's next pass)
+      releaseRows(viaNeighbors)
+      releaseRows(labels)
       labels = nextM
-      labelsRdd = nextRdd
       converged = s.compareTo(prevSum) == 0
       prevSum = s
       i += 1
     }
     // the result depends only on the final label table; the edge tables
     // were round-loop inputs
-    pRdd.unpersist(blocking = false)
-    edgesRdd.unpersist(blocking = false)
+    releaseRows(p)
+    releaseRows(edges)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"Dedup.clusters exhausted maxIter=$maxIter before the label fixpoint: " +
@@ -1506,46 +1435,21 @@ object Dedup {
     * the candidate join stays bounded at any corpus size.
     *
     * The distinct (id, chunk_md5) table feeds FOUR subtrees (sizes,
-    * keep, both self-join sides); without a persist, Spark re-runs the
-    * Rabin rolling-hash kernel over the full text once per subtree
-    * (~5 corpus passes). LAZY form: the table stays persisted for the
-    * session (same LRU contract as `ppjoinPairs`); bounded pipelines
-    * should use `withCdcPairs`, which releases it on materialization.
+    * keep, both self-join sides); unmaterialized, Spark would re-run the
+    * Rabin rolling-hash kernel over the full text once per subtree (~5
+    * corpus passes), so it is materialized when the frame is built (the
+    * object's intermediates rule) — ONE CDC-kernel execution.
     */
   def cdcPairs(
       df: DataFrame,
       idCol: String,
       textCol: String,
       minShared: Long = 2L,
-      maxChunkDocs: Int = 100): DataFrame =
-    cdcPairsFrom(cdcChunkTable(df, idCol, textCol), minShared, maxChunkDocs)
-
-  /** Leak-free scope for `cdcPairs`: hands the pair frame to `use`
-    * (which must MATERIALIZE it — write, count, collect) and unpersists
-    * the chunk table when `use` returns — the `withPpjoinPairs` twin.
-    */
-  def withCdcPairs[T](
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      minShared: Long = 2L,
-      maxChunkDocs: Int = 100)(use: DataFrame => T): T = {
-    val chunks = cdcChunkTable(df, idCol, textCol)
-    try use(cdcPairsFrom(chunks, minShared, maxChunkDocs))
-    finally chunks.unpersist(blocking = false)
-  }
-
-  /** Distinct (id, chunk_md5), persisted — ONE CDC-kernel execution no
-    * matter how many plan subtrees consume it.
-    */
-  private def cdcChunkTable(df: DataFrame, idCol: String, textCol: String): DataFrame =
+      maxChunkDocs: Int = 100): DataFrame = {
     // distinct (doc, chunk): a chunk repeated WITHIN a doc counts once
-    cdcChunks(df, idCol, textCol)
+    val chunks = persistRows(cdcChunks(df, idCol, textCol)
       .select(col(idCol).as("id"), col("chunk_md5"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  private def cdcPairsFrom(chunks: DataFrame, minShared: Long, maxChunkDocs: Int): DataFrame = {
+      .distinct())
     val sizes = chunks.groupBy("id").agg(count(lit(1)).as("n"))
     val keep = chunks
       .groupBy("chunk_md5")
@@ -1589,9 +1493,7 @@ object Dedup {
       maxBucket: Int = 0): DataFrame = {
     // the base signature table is multi-consumer (banding + verify sets):
     // materialize before the fan-out, as in minhashLshPairs
-    val bdocs = shingleHashesAndSig(base, idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bdocs.count()
+    val bdocs = persistRows(shingleHashesAndSig(base, idCol, textCol, n, perms))
     incrementalPairsOn(bdocs, delta, idCol, textCol, n, perms, bands, tau, maxBucket)
   }
 
@@ -1616,9 +1518,7 @@ object Dedup {
     // auto cap sizes from the BASE corpus (the side whose buckets are
     // capped); one count over the stored signature index
     val cap = if (maxBucket > 0) maxBucket else maxBucketFor(bdocs.count())
-    val ddocs = shingleHashesAndSig(delta, idCol, textCol, n, perms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ddocs.count()
+    val ddocs = persistRows(shingleHashesAndSig(delta, idCol, textCol, n, perms))
     val bb = bandedKeys(bdocs, bands, rows)
     val capped = bb.join(
       bb.groupBy("band", "key").agg(count(lit(1)).as("_c"))
@@ -1663,11 +1563,9 @@ object Dedup {
     val src = df.select(col(idCol).cast("long").as("id"), col(groupCol).as("grp"))
     // groups × perms rows — materialize so the self-join's two sides
     // don't each re-run the corpus signature kernel
-    val kv = sigs.join(src, "id")
+    val kv = persistRows(sigs.join(src, "id")
       .groupBy(col("grp"), col("k"))
-      .agg(min(col("v")).as("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    kv.count()
+      .agg(min(col("v")).as("v")))
     kv.as("a")
       .join(kv.as("b"), col("a.k") === col("b.k") && col("a.grp") < col("b.grp"))
       .groupBy(col("a.grp").as("src_a"), col("b.grp").as("src_b"))
@@ -2150,13 +2048,10 @@ object Dedup {
     */
   def exciseDuplicateChunks(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     // two consumers with different exchange children (the election
-    // groupBy and the ownership join) — without the persist the CDC
-    // chunk kernel re-runs the corpus once per consumer (the CTE
-    // double-inlining trap). The returned plan reads the cache lazily;
-    // LRU owns eviction and an evicted block recomputes deterministically
-    // (the lshPairs cache contract) — position triples only, tiny rows.
-    val chunks = cdcChunks(df, idCol, textCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // groupBy and the ownership join) — unmaterialized, the CDC chunk
+    // kernel would re-run the corpus once per consumer (the CTE
+    // double-inlining trap). Position triples only, tiny rows.
+    val chunks = persistRows(cdcChunks(df, idCol, textCol))
     val firstOwner = chunks
       .groupBy(col("chunk_md5"))
       .agg(min(struct(col(idCol).as("oid"), col("chunk_idx").as("oidx"))).as("owner"))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.bridge.SqlBridge.persistRows
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -388,26 +389,6 @@ object Multimodal {
       Similarity.nearDupPairs(pooled, "id", "embedding", tau, dims, maxBroadcastRows)
   }
 
-  /** Leak-free scope for [[audioNearDup]] — bounded pipelines (artifact
-    * builds, one-shot writes) come through here so the pair kernels'
-    * internal vector/class caches are released on materialization
-    * (`Similarity.withNearDupPairs` contract).
-    */
-  def withAudioNearDup[T](
-      df: DataFrame,
-      idCol: String,
-      payloadCol: String,
-      tau: Double,
-      dims: Int = 12,
-      maxBroadcastRows: Long = Similarity.MaxBroadcastRows,
-      exactFirst: Boolean = false)(use: DataFrame => T): T = {
-    val pooled = pooledAudioEmbedding(df, idCol, payloadCol, dims)
-    if (exactFirst)
-      Similarity.withNearDupPairsExactFirst(pooled, "id", "embedding", tau, dims, maxBroadcastRows)(use)
-    else
-      Similarity.withNearDupPairs(pooled, "id", "embedding", tau, dims, maxBroadcastRows)(use)
-  }
-
   /** Deterministic fixture encoder: a minimal RIFF/AVI-shaped container
     * (hand-built like `synthWav` — byte-deterministic, no codec):
     *
@@ -703,23 +684,6 @@ object Multimodal {
       Similarity.nearDupPairs(pooled, idCol, "embedding", tau, dims, maxBroadcastRows)
   }
 
-  /** Leak-free scope for [[videoNearDup]] — the [[withAudioNearDup]]
-    * twin for the video modality.
-    */
-  def withVideoNearDup[T](
-      frameFeatures: DataFrame,
-      tau: Double,
-      idCol: String = "id",
-      dims: Int = 12,
-      maxBroadcastRows: Long = Similarity.MaxBroadcastRows,
-      exactFirst: Boolean = false)(use: DataFrame => T): T = {
-    val pooled = pooledVideoEmbedding(frameFeatures, idCol)
-    if (exactFirst)
-      Similarity.withNearDupPairsExactFirst(pooled, idCol, "embedding", tau, dims, maxBroadcastRows)(use)
-    else
-      Similarity.withNearDupPairs(pooled, idCol, "embedding", tau, dims, maxBroadcastRows)(use)
-  }
-
   /** Shot-boundary (scene-cut) detection over a per-frame feature table
     * (`frameFeatures` output: id, frame_idx, dim, value): a frame is a
     * cut when its feature vector moved at least `tauFp` from the
@@ -972,11 +936,11 @@ object Multimodal {
     val hashesRaw = imageBlockhash(df, idCol, payloadCol, grid).where(col("ok"))
     if (!exactFirst) phashBandedPairs(hashesRaw, nWords, maxDist)
     else {
-      // persist the hash table: it feeds BOTH the class election and the
-      // member join (different exchange children — uncached, the image
-      // DECODE would run once per consumer). One 6-column row per image;
-      // LRU-owned like the class table below.
-      val hashes = hashesRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // materialize the hash table (`SqlBridge.persistRows`): it feeds
+      // BOTH the class election and the member join (different exchange
+      // children — otherwise the image DECODE would run once per
+      // consumer). One 6-column row per image.
+      val hashes = persistRows(hashesRaw)
       // the dense-dup production order (the nearDupPairsExactFirst
       // story in hash space): byte-identical re-uploads share one hash,
       // and identical hashes collide in EVERY band — a class of n twins
@@ -986,34 +950,26 @@ object Multimodal {
       // inherit the representative Hamming — identical hashes, same
       // distance; within-class pairs are Hamming 0 by definition).
       val wcols = (0 until nWords).map(j => col(s"w$j"))
-      val classes = hashes.groupBy(wcols: _*)
-        .agg(min(col("id")).as("rep"), count(lit(1)).as("csz"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        val members = hashes.join(classes.select(wcols :+ col("rep"): _*), (0 until nWords).map(j => s"w$j"))
-          .select(col("rep"), col("id"))
-        val reps = classes.select(col("rep").as("id") +: wcols: _*)
-        val repPairs = phashBandedPairs(reps, nWords, maxDist)
-        val cross = repPairs
-          .join(members.select(col("rep").as("da"), col("id").as("ma")), Seq("da"))
-          .join(members.select(col("rep").as("db"), col("id").as("mb")), Seq("db"))
-          .select(
-            least(col("ma"), col("mb")).as("da"),
-            greatest(col("ma"), col("mb")).as("db"),
-            col("hamming"))
-        val within = classes.where(col("csz") > 1L)
-          .join(members, Seq("rep"))
-          .select(col("rep"), col("id").as("ma"))
-          .join(members.select(col("rep"), col("id").as("mb")), Seq("rep"))
-          .where(col("ma") < col("mb"))
-          .select(col("ma").as("da"), col("mb").as("db"), lit(0L).as("hamming"))
-        cross.unionByName(within)
-      } catch {
-        case e: Throwable =>
-          classes.unpersist(blocking = false)
-          hashes.unpersist(blocking = false)
-          throw e
-      }
+      val classes = persistRows(hashes.groupBy(wcols: _*)
+        .agg(min(col("id")).as("rep"), count(lit(1)).as("csz")))
+      val members = hashes.join(classes.select(wcols :+ col("rep"): _*), (0 until nWords).map(j => s"w$j"))
+        .select(col("rep"), col("id"))
+      val reps = classes.select(col("rep").as("id") +: wcols: _*)
+      val repPairs = phashBandedPairs(reps, nWords, maxDist)
+      val cross = repPairs
+        .join(members.select(col("rep").as("da"), col("id").as("ma")), Seq("da"))
+        .join(members.select(col("rep").as("db"), col("id").as("mb")), Seq("db"))
+        .select(
+          least(col("ma"), col("mb")).as("da"),
+          greatest(col("ma"), col("mb")).as("db"),
+          col("hamming"))
+      val within = classes.where(col("csz") > 1L)
+        .join(members, Seq("rep"))
+        .select(col("rep"), col("id").as("ma"))
+        .join(members.select(col("rep"), col("id").as("mb")), Seq("rep"))
+        .where(col("ma") < col("mb"))
+        .select(col("ma").as("da"), col("mb").as("db"), lit(0L).as("hamming"))
+      cross.unionByName(within)
     }
   }
 

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.bridge.SqlBridge.{persistRows, persistedRowCount}
 import graft.functions.GraftFunctions.cosine_sim
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
@@ -234,9 +235,15 @@ object Similarity {
     * EVERY table, so they are always found.
     *
     * `nBits <= 0` (the default) sizes the hash from the corpus count via
-    * `lshBitsFor` — one count job, the occupancy that keeps candidate
-    * volume linear as the corpus grows. Pass an explicit value only to
-    * pin a reproducible layout (e.g. for an oracle replay).
+    * `lshBitsFor` — the occupancy that keeps candidate volume linear as
+    * the corpus grows; the count is the one the prepared-vector
+    * materialization takes. Pass an explicit value only to pin a
+    * reproducible layout (e.g. for an oracle replay).
+    *
+    * The prepared vectors (id, unit vec, norm per row) are materialized
+    * with `SqlBridge.persistRows` when the frame is built: the bucketing
+    * pass and the two late-materialize vector joins share that one copy,
+    * which ContextCleaner releases once the frame is unreachable.
     */
   def lshPairs(
       df: DataFrame,
@@ -245,43 +252,9 @@ object Similarity {
       tau: Double,
       dims: Int,
       nBits: Int = 0,
-      nTables: Int = 8): DataFrame =
-    lshPairsBuilt(df, idCol, embCol, tau, dims, nBits, nTables)._2
-
-  /** Leak-free scope for [[lshPairs]]: `use` must MATERIALIZE the pair
-    * frame; the internal prepared-vector cache (corpus-sized — id, unit
-    * vec, norm per row) is released when it returns. The lazy form's LRU
-    * contract only covers the MEMORY tier; disk-spilled blocks stay
-    * pinned until unpersist, so bounded pipelines come through here.
-    */
-  def withLshPairs[T](
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      nBits: Int = 0,
-      nTables: Int = 8)(use: DataFrame => T): T = {
-    val (prep, pairs) = lshPairsBuilt(df, idCol, embCol, tau, dims, nBits, nTables)
-    try use(pairs)
-    finally prep.unpersist(blocking = false)
-  }
-
-  private def lshPairsBuilt(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      nBits: Int,
-      nTables: Int): (DataFrame, DataFrame) = {
-    // prep feeds up to four scans (the sizing count, the bucketing pass,
-    // and the two late-materialize vector joins) — persist once so they
-    // share a single materialization instead of re-running the normalize
-    // pipeline per consumer; the count below forces it eagerly
-    val prep = prepared(df, idCol, embCol).persist()
-    val n = prep.count()
-    val bits = if (nBits > 0) nBits else lshBitsFor(n)
+      nTables: Int = 8): DataFrame = {
+    val prep = persistRows(prepared(df, idCol, embCol))
+    val bits = if (nBits > 0) nBits else lshBitsFor(persistedRowCount(prep))
     // ONE corpus scan emits every (doc, table) bucket row (the shared
     // typed kernel — a union of per-table scans would read the corpus
     // nTables times at 100 TB); table prefix in the key keeps tables from
@@ -298,16 +271,12 @@ object Similarity {
       .select(col("id").as("id_a"), col("id_b"))
       .distinct()
     val vecs = prep.select(col("id"), col("vec"))
-    // the cached prep must outlive this call (the returned plan is lazy
-    // and reads it at the caller's first action) — eviction is LRU's
-    // job, and an evicted block recomputes, never corrupts
-    val pairs = cand
+    cand
       .join(vecs.select(col("id").as("id_a"), col("vec").as("va")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("vec").as("vb")), Seq("id_b"))
       .withColumn("cosine", cosine_sim(col("va"), col("vb")))
       .where(col("cosine") >= tau)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-    (prep, pairs)
   }
 
   /** Deterministic pseudo-random hyperplane component via an LCG over the
@@ -1372,77 +1341,33 @@ object Similarity {
       tau: Double,
       dims: Int,
       maxExactRows: Long = MaxBroadcastRows): DataFrame = {
-    // persist the prepared vectors BEFORE the routing count: the count
-    // executes the caller's whole upstream pipeline (for audio/video
-    // near-dup that is the full media decode + pooling), and the chosen
-    // kernel would otherwise run it a SECOND time. One row per vector
-    // (id + dims doubles) — tiny next to what produced it; the returned
-    // plan reads it lazily, so eviction is LRU-owned, same contract as
-    // `nearDupPairsExactFirst`'s prep/class tables (an evicted block
-    // recomputes, never corrupts).
-    val prep = df.select(col(idCol), col(embCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    routedPairs(prep, idCol, embCol, tau, dims, maxExactRows)
+    // materialize the vectors BEFORE routing: the routing count is the
+    // one that run takes, and it executes the caller's whole upstream
+    // pipeline (for audio/video near-dup that is the full media decode +
+    // pooling), which the chosen kernel would otherwise run a SECOND
+    // time. One row per vector (id + dims doubles) — tiny next to what
+    // produced it.
+    val prep = persistRows(df.select(col(idCol), col(embCol)))
+    routedPairs(prep, persistedRowCount(prep), idCol, embCol, tau, dims, maxExactRows)
   }
 
-  /** Leak-free scope for [[nearDupPairs]]: `use` must MATERIALIZE the
-    * pair frame (write, count, collect); the prepared-vector cache is
-    * released when it returns. The lazy form's LRU contract only covers
-    * the MEMORY tier — DISK-spilled blocks stay pinned until unpersist,
-    * so bounded pipelines (artifact builds, one-shot writes) must come
-    * through here, the `withPpjoinPairs` contract.
-    */
-  def withNearDupPairs[T](
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      maxExactRows: Long = MaxBroadcastRows)(use: DataFrame => T): T = {
-    val prep = df.select(col(idCol), col(embCol))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try routedPairsScoped(prep, idCol, embCol, tau, dims, maxExactRows)(use)
-    finally prep.unpersist(blocking = false)
-  }
-
-  /** Scoped twin of [[routedPairs]]: the banded route goes through
-    * [[withLshPairs]] so ITS internal vector cache is released too —
-    * the lazy route would leave it pinned past the caller's scope.
-    */
-  private def routedPairsScoped[T](
-      prepared: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      maxExactRows: Long)(use: DataFrame => T): T = {
-    val n = prepared.count()
-    if (n <= maxExactRows)
-      use(cosinePairs(prepared, idCol, embCol, tau)
-        .select(col("va").as("id_a"), col("vb").as("id_b"), col("cosine")))
-    else
-      withLshPairs(prepared, idCol, embCol, tau, dims)(use)
-  }
-
-  /** The count-then-route core of [[nearDupPairs]], for inputs that are
-    * ALREADY cache-backed (exact-first calls it on the representative
-    * frame derived from its persisted class table — a second persist
-    * there would pin a duplicate copy per invocation).
+  /** The route-by-count core of [[nearDupPairs]]: `n` is the row count of
+    * the already materialized `prepared` (exact-first calls it on its
+    * representative table).
     */
   private def routedPairs(
       prepared: DataFrame,
+      n: Long,
       idCol: String,
       embCol: String,
       tau: Double,
       dims: Int,
-      maxExactRows: Long): DataFrame = {
-    val n = prepared.count()
+      maxExactRows: Long): DataFrame =
     if (n <= maxExactRows)
       cosinePairs(prepared, idCol, embCol, tau)
         .select(col("va").as("id_a"), col("vb").as("id_b"), col("cosine"))
     else
       lshPairs(prepared, idCol, embCol, tau, dims)
-  }
 
   /** `nearDupPairs` with the EXACT-FIRST collapse — the production order
     * for dense-duplicate corpora, where the banded route alone is
@@ -1477,112 +1402,46 @@ object Similarity {
       embCol: String,
       tau: Double,
       dims: Int,
-      maxExactRows: Long = MaxBroadcastRows): DataFrame =
-    exactFirstPlan(df, idCol, embCol, tau, dims, maxExactRows)._3
-
-  /** Leak-free scope for [[nearDupPairsExactFirst]]: releases BOTH
-    * internal caches (prepared vectors + identity-class table) when
-    * `use` returns — same disk-tier rationale as [[withNearDupPairs]].
-    */
-  def withNearDupPairsExactFirst[T](
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      maxExactRows: Long = MaxBroadcastRows)(use: DataFrame => T): T = {
-    val p = exactFirstParts(df, idCol, embCol, tau)
-    // the rep-pair routing also runs scoped, so the banded route's
-    // internal vector cache is released along with prep and classes
-    try routedPairsScoped(p.reps, "id", "emb", tau, dims, maxExactRows)(rp => use(p.expand(rp)))
-    finally {
-      p.classes.unpersist(blocking = false)
-      p.prep.unpersist(blocking = false)
-    }
-  }
-
-  /** Shared builder: returns (prep cache, class cache, pair frame); on a
-    * build failure both caches are released before the rethrow.
-    */
-  private def exactFirstPlan(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double,
-      dims: Int,
-      maxExactRows: Long): (DataFrame, DataFrame, DataFrame) = {
-    val p = exactFirstParts(df, idCol, embCol, tau)
-    try (p.prep, p.classes, p.expand(routedPairs(p.reps, "id", "emb", tau, dims, maxExactRows)))
-    catch {
-      case e: Throwable =>
-        p.classes.unpersist(blocking = false)
-        p.prep.unpersist(blocking = false)
-        throw e
-    }
-  }
-
-  /** The class-collapse scaffolding shared by the lazy and scoped
-    * exact-first forms: prep + class caches, the representative frame to
-    * pair, and the expansion back to member pairs.
-    */
-  private case class ExactFirstParts(
-      prep: DataFrame,
-      classes: DataFrame,
-      reps: DataFrame,
-      expand: DataFrame => DataFrame)
-
-  private def exactFirstParts(
-      df: DataFrame,
-      idCol: String,
-      embCol: String,
-      tau: Double): ExactFirstParts = {
-    // persist the prepared vectors: they feed BOTH the class election
-    // and the member join (different exchange children — without the
-    // cache the caller's upstream pipeline, e.g. a media DECODE, runs
-    // once per consumer). One row per vector, dims doubles — tiny next
-    // to what produced it. Same LRU-owned contract as the class table.
-    val prep = df.select(
+      maxExactRows: Long = MaxBroadcastRows): DataFrame = {
+    // materialized: the prepared vectors feed BOTH the class election
+    // and the member join (different exchange children — otherwise the
+    // caller's upstream pipeline, e.g. a media DECODE, runs once per
+    // consumer). One row per vector, dims doubles — tiny next to what
+    // produced it.
+    val prep = persistRows(df.select(
       col(idCol).cast("long").as("id"),
-      col(embCol).cast("array<double>").as("emb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      col(embCol).cast("array<double>").as("emb")))
     // identity classes keyed by the exact vector value (array equality);
-    // persist: the class table feeds the member join, the rep pairing,
-    // and the self-cosine — tiny rows (one per DISTINCT vector)
-    val classes = prep.groupBy(col("emb"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("csz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // materialized: the class table feeds the member join, the rep
+    // pairing, and the self-cosine — tiny rows (one per DISTINCT vector)
+    val classes = persistRows(prep.groupBy(col("emb"))
+      .agg(min(col("id")).as("rep"), count(lit(1)).as("csz")))
     val members = prep.join(classes.select(col("emb"), col("rep")), Seq("emb"))
       .select(col("rep"), col("id"))
     val reps = classes.select(col("rep").as("id"), col("emb"))
-    val expand = (repPairs: DataFrame) => {
-      val cross = repPairs
-        .join(members.select(col("rep").as("id_a"), col("id").as("ma")), Seq("id_a"))
-        .join(members.select(col("rep").as("id_b"), col("id").as("mb")), Seq("id_b"))
-        .select(
-          least(col("ma"), col("mb")).as("id_a"),
-          greatest(col("ma"), col("mb")).as("id_b"),
-          col("cosine"))
-      // within-class pairs: the self-cosine is computed with the SAME
-      // expression sequence as the pair kernels (dot / nrm·nrm), so a
-      // degenerate zero-norm class yields NaN and drops at the filter
-      // exactly as it would in the all-pairs kernel
-      val self = classes.where(col("csz") > 1L)
-        .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-        .withColumn("cos_raw", dot(col("emb"), col("emb")) / (col("nrm") * col("nrm")))
-        .where(col("cos_raw") >= tau)
-        .select(col("rep"), round(col("cos_raw"), 4).as("cosine"))
-      val within = self
-        .join(members.select(col("rep"), col("id").as("ma")), Seq("rep"))
-        .join(members.select(col("rep"), col("id").as("mb")), Seq("rep"))
-        .where(col("ma") < col("mb"))
-        .select(col("ma").as("id_a"), col("mb").as("id_b"), col("cosine"))
-      // the lazy form's plan reads the persisted class table lazily;
-      // eager materialization here would defeat the single-DAG consumers
-      // — LRU owns eviction, and an evicted block recomputes, never
-      // corrupts (the lshPairs cache contract)
-      cross.unionByName(within)
-    }
-    ExactFirstParts(prep, classes, reps, expand)
+    val repPairs = routedPairs(reps, persistedRowCount(classes), "id", "emb", tau, dims, maxExactRows)
+    val cross = repPairs
+      .join(members.select(col("rep").as("id_a"), col("id").as("ma")), Seq("id_a"))
+      .join(members.select(col("rep").as("id_b"), col("id").as("mb")), Seq("id_b"))
+      .select(
+        least(col("ma"), col("mb")).as("id_a"),
+        greatest(col("ma"), col("mb")).as("id_b"),
+        col("cosine"))
+    // within-class pairs: the self-cosine is computed with the SAME
+    // expression sequence as the pair kernels (dot / nrm·nrm), so a
+    // degenerate zero-norm class yields NaN and drops at the filter
+    // exactly as it would in the all-pairs kernel
+    val self = classes.where(col("csz") > 1L)
+      .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
+      .withColumn("cos_raw", dot(col("emb"), col("emb")) / (col("nrm") * col("nrm")))
+      .where(col("cos_raw") >= tau)
+      .select(col("rep"), round(col("cos_raw"), 4).as("cosine"))
+    val within = self
+      .join(members.select(col("rep"), col("id").as("ma")), Seq("rep"))
+      .join(members.select(col("rep"), col("id").as("mb")), Seq("rep"))
+      .where(col("ma") < col("mb"))
+      .select(col("ma").as("id_a"), col("mb").as("id_b"), col("cosine"))
+    cross.unionByName(within)
   }
 
   /** IVF index health: per-cell occupancy and (base vs delta) assignment

@@ -1,7 +1,7 @@
 package graft.functions
 
 import graft.ext.{Dedup, Sketches, TextAnalysis}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import graft.bridge.SqlBridge
@@ -26,9 +26,9 @@ import graft.bridge.SqlBridge
   * Unlike the fold TVFs (which stay unresolved until analysis), these
   * builders resolve the named table via the ACTIVE session at analysis
   * time — required because the underlying operators are eager about
-  * their own materialization points (the MinHash signature persist).
+  * their own materialization points (the MinHash signature table).
   * Consequence: the relation must exist when the query is ANALYZED, and
-  * the signature-table persist runs then too.
+  * the signature table is materialized then too.
   *
   * Each TVF is declared once in `functions`, registered the same way as
   * `FoldTableFunctions.functions`.
@@ -47,55 +47,22 @@ object ExtTableFunctions {
   val ExactSubstringName = "exact_substring_excise"
   val FuzzyDecontamName = "fuzzy_decontaminate"
 
-  /** Session-scoped artifact cache for the PAIR-GRAPH TVFs (minhash /
-    * ppjoin) — the builders whose whole signature→candidate→verify
-    * pipeline would otherwise re-run on EVERY SQL query (and, because
-    * Spark inlines duplicate CTE references, can re-run twice inside ONE
-    * query): the first call materializes the pair table to parquet, every
-    * later call — Scala or SQL — reads the file, the same amortization
-    * `ExtQueries.artifactFor` gives Scala callers. Keyed by
-    * (function, table name, params, applicationId): artifacts are
-    * immutable snapshots, so a pipeline that mutates the underlying view
-    * mid-session must register a fresh view name (the standard artifact
-    * contract). computeIfAbsent builds at most once under concurrency;
-    * paths are appId-suffixed and deleted on JVM exit.
+  /** The pair-graph TVFs (minhash, ppjoin, containment, clusters,
+    * excision, decontamination) go through `graft.Artifacts`: without
+    * it their whole signature→candidate→verify pipeline would re-run on
+    * EVERY SQL query (and, because Spark inlines duplicate CTE
+    * references, can re-run twice inside ONE query). The first call
+    * writes the result to parquet and every later call reads the file,
+    * for as long as the named relation's content is unchanged: the entry
+    * is keyed on the relation's plan and files, not its name, so a
+    * replaced view gets fresh pairs.
     */
-  private val artifactCache =
-    new java.util.concurrent.ConcurrentHashMap[String, LogicalPlan]
-
-  private def cachedPlan(key: String)(build: => org.apache.spark.sql.DataFrame): LogicalPlan =
-    cachedPlanScoped(key)(write => write(build))
-
-  /** `cachedPlan` for builders whose kernel pins internal caches: `build`
-    * receives the parquet writer and runs INSIDE the kernel's release
-    * scope (e.g. `Dedup.withPpjoinPairs`), so the pinned storage is freed
-    * the moment the artifact write lands instead of surviving the session.
-    */
-  private def cachedPlanScoped(key: String)(
-      build: (org.apache.spark.sql.DataFrame => Unit) => Unit): LogicalPlan =
-    artifactCache.computeIfAbsent(key, _ => {
-      val spark = SparkSession.active
-      // md5 of the full key, not key.hashCode: a 32-bit collision between
-      // two live keys would make the second overwrite-write the first
-      // key's parquet while its cached plan still points there — silent
-      // wrong rows. 128 bits removes the case instead of betting on it.
-      val keyHex = java.security.MessageDigest.getInstance("MD5")
-        .digest(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        .map("%02x".format(_)).mkString
-      val path = new java.io.File(
-        sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-        s"graft_tvf_${keyHex}_${spark.sparkContext.applicationId}").toString
-      build(df => df.write.mode("overwrite").parquet(path))
-      val root = new java.io.File(path)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm))
-          f.delete(): Unit
-        }
-        rm(root)
-      }))
-      SqlBridge.analyzedPlan(spark.read.parquet(path))
-    })
+  private def cachedPlan(kind: String, tables: Seq[String], params: Any*)(
+      build: Seq[DataFrame] => DataFrame): LogicalPlan = {
+    val spark = SparkSession.active
+    val inputs = tables.map(spark.table)
+    SqlBridge.analyzedPlan(graft.Artifacts.parquet(kind, inputs, params: _*)(build(inputs)))
+  }
 
   /** `minhash_pairs(table[, tau])` — MinHash-LSH near-dup pairs
     * `(da, db, jaccard)` over a `(doc_id, text)` relation.
@@ -104,9 +71,8 @@ object ExtTableFunctions {
     require(args.nonEmpty && args.length <= 2, s"usage: $MinhashPairsName(table[, tau])")
     val table = FoldTableFunctions.stringArg(MinhashPairsName, args, 0)
     val tau = FoldTableFunctions.doubleArg(MinhashPairsName, args, 1, 0.5)
-    val spark = SparkSession.active
-    cachedPlan(s"$MinhashPairsName:$table:$tau:${spark.sparkContext.applicationId}") {
-      Dedup.minhashLshPairs(spark.table(table), "doc_id", "text", tau = tau)
+    cachedPlan(MinhashPairsName, Seq(table), tau) { case Seq(docs) =>
+      Dedup.minhashLshPairs(docs, "doc_id", "text", tau = tau)
     }
   }
 
@@ -152,16 +118,15 @@ object ExtTableFunctions {
     * actually consumes (which doc to keep per group), not just the raw
     * pair graph `minhash_pairs` already exposes. Routed through the
     * artifact cache: the signature pipeline AND the label-propagation
-    * fixpoint run once per (table, τ); every later SQL query reads the
-    * parquet artifact.
+    * fixpoint run once per (relation content, τ); every later SQL query
+    * reads the parquet artifact.
     */
   def dedupClustersBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.nonEmpty && args.length <= 2, s"usage: $DedupClustersName(table[, tau])")
     val table = FoldTableFunctions.stringArg(DedupClustersName, args, 0)
     val tau = FoldTableFunctions.doubleArg(DedupClustersName, args, 1, 0.5)
-    val spark = SparkSession.active
-    cachedPlan(s"$DedupClustersName:$table:$tau:${spark.sparkContext.applicationId}") {
-      Dedup.clusters(Dedup.minhashLshPairs(spark.table(table), "doc_id", "text", tau = tau))
+    cachedPlan(DedupClustersName, Seq(table), tau) { case Seq(docs) =>
+      Dedup.clusters(Dedup.minhashLshPairs(docs, "doc_id", "text", tau = tau))
     }
   }
 
@@ -171,14 +136,14 @@ object ExtTableFunctions {
     * per input document `(doc_id, n_chunks, n_kept, clean_text)` — the
     * substring-level dedup OUTPUT a SQL-only pipeline ships, not just
     * the chunk table. Routed through the artifact cache: the chunk +
-    * election pipeline runs once per table; later SQL reads parquet.
+    * election pipeline runs once per relation content; later SQL reads
+    * parquet.
     */
   def dedupExciseBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.length == 1, s"usage: $DedupExciseName(table)")
     val table = FoldTableFunctions.stringArg(DedupExciseName, args, 0)
-    val spark = SparkSession.active
-    cachedPlan(s"$DedupExciseName:$table:${spark.sparkContext.applicationId}") {
-      Dedup.exciseDuplicateChunks(spark.table(table), "doc_id", "text")
+    cachedPlan(DedupExciseName, Seq(table)) { case Seq(docs) =>
+      Dedup.exciseDuplicateChunks(docs, "doc_id", "text")
     }
   }
 
@@ -189,9 +154,8 @@ object ExtTableFunctions {
     require(args.nonEmpty && args.length <= 2, s"usage: $PpjoinPairsName(table[, tau])")
     val table = FoldTableFunctions.stringArg(PpjoinPairsName, args, 0)
     val tau = FoldTableFunctions.doubleArg(PpjoinPairsName, args, 1, 0.5)
-    val spark = SparkSession.active
-    cachedPlanScoped(s"$PpjoinPairsName:$table:$tau:${spark.sparkContext.applicationId}") { write =>
-      Dedup.withPpjoinPairs(spark.table(table), "doc_id", "text", n = 3, tau = tau)(write)
+    cachedPlan(PpjoinPairsName, Seq(table), tau) { case Seq(docs) =>
+      Dedup.ppjoinPairs(docs, "doc_id", "text", n = 3, tau = tau)
     }
   }
 
@@ -215,20 +179,15 @@ object ExtTableFunctions {
     * jaccard)` over a `(doc_id, text)` relation (3-gram shingles,
     * lossless asymmetric prefix filter). Routed through the artifact
     * cache like the other pair-graph TVFs: the shingle→prefix→verify
-    * pipeline runs ONCE per (table, τ) PER SESSION, inside the kernel's
-    * persist release scope; every later SQL call reads the parquet
-    * snapshot. Consequence (the shared artifact contract above): the
-    * result reflects the relation's contents at FIRST call — a pipeline
-    * that mutates or replaces the view mid-session must register a
-    * fresh view name to get fresh pairs, or it will read stale ones.
+    * pipeline runs once per (relation content, τ); every later SQL call
+    * reads the parquet copy.
     */
   def containmentPairsBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.nonEmpty && args.length <= 2, s"usage: $ContainmentPairsName(table[, tau])")
     val table = FoldTableFunctions.stringArg(ContainmentPairsName, args, 0)
     val tau = FoldTableFunctions.doubleArg(ContainmentPairsName, args, 1, 0.8)
-    val spark = SparkSession.active
-    cachedPlanScoped(s"$ContainmentPairsName:$table:$tau:${spark.sparkContext.applicationId}") { write =>
-      Dedup.withContainmentPairs(spark.table(table), "doc_id", "text", n = 3, tau = tau)(write)
+    cachedPlan(ContainmentPairsName, Seq(table), tau) { case Seq(docs) =>
+      Dedup.containmentPairs(docs, "doc_id", "text", n = 3, tau = tau)
     }
   }
 
@@ -236,25 +195,23 @@ object ExtTableFunctions {
     * substring dedup over a `(doc_id, text)` relation: every duplicated
     * token run ≥ w (default 8) keeps only its corpus-first occurrence;
     * rows are `(doc_id, n_spans, n_tokens_removed, clean_text)`. Routed
-    * through the artifact cache (once per (table, w) PER SESSION — the
-    * window-hash election is a corpus pass; mutated views need a fresh
-    * view name, the shared artifact contract).
+    * through the artifact cache (once per (relation content, w) — the
+    * window-hash election is a corpus pass).
     */
   def exactSubstringBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.nonEmpty && args.length <= 2, s"usage: $ExactSubstringName(table[, w])")
     val table = FoldTableFunctions.stringArg(ExactSubstringName, args, 0)
     val w = FoldTableFunctions.doubleArg(ExactSubstringName, args, 1, 8.0).toInt
-    val spark = SparkSession.active
-    cachedPlan(s"$ExactSubstringName:$table:$w:${spark.sparkContext.applicationId}") {
-      Dedup.exciseExactSubstrings(spark.table(table), "doc_id", "text", w)
+    cachedPlan(ExactSubstringName, Seq(table), w) { case Seq(docs) =>
+      Dedup.exciseExactSubstrings(docs, "doc_id", "text", w)
     }
   }
 
   /** `fuzzy_decontaminate(train_table, probe_table[, tau[, n]])` —
     * containment-based eval-set decontamination ledger: every train doc
     * with its verdict against the probe relation (C(probe→train) ≥ τ at
-    * n-gram grain, default τ=0.4, n=2). Same once-per-session artifact
-    * caching as the other pair-graph TVFs.
+    * n-gram grain, default τ=0.4, n=2). Same artifact caching as the
+    * other pair-graph TVFs.
     */
   def fuzzyDecontamBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.length >= 2 && args.length <= 5,
@@ -264,11 +221,8 @@ object ExtTableFunctions {
     val tau = FoldTableFunctions.doubleArg(FuzzyDecontamName, args, 2, 0.4)
     val n = FoldTableFunctions.doubleArg(FuzzyDecontamName, args, 3, 2.0).toInt
     val maxDf = FoldTableFunctions.doubleArg(FuzzyDecontamName, args, 4, 100000.0).toInt
-    val spark = SparkSession.active
-    cachedPlan(s"$FuzzyDecontamName:$train:$probe:$tau:$n:$maxDf:${spark.sparkContext.applicationId}") {
-      Dedup.fuzzyDecontamination(
-        spark.table(train), spark.table(probe), "doc_id", "text",
-        n = n, tau = tau, maxDf = maxDf)
+    cachedPlan(FuzzyDecontamName, Seq(train, probe), tau, n, maxDf) { case Seq(t, p) =>
+      Dedup.fuzzyDecontamination(t, p, "doc_id", "text", n = n, tau = tau, maxDf = maxDf)
     }
   }
 
@@ -312,20 +266,19 @@ object ExtTableFunctions {
     tvf(ContainmentPairsName,
       "containment_pairs(table[, tau]) - directed shingle-containment pairs " +
         "(inner_id, outer_id, n_inner, n_shared, containment, jaccard) over a " +
-        "(doc_id, text) relation; result is cached once per (table, tau) per " +
-        "session - re-register a fresh view name after mutating the relation",
+        "(doc_id, text) relation; result is cached once per (relation content, tau)",
       containmentPairsBuilder),
     tvf(ExactSubstringName,
       "exact_substring_excise(table[, w]) - exact-substring dedup: every " +
         "duplicated token run >= w keeps only its corpus-first occurrence " +
         "(doc_id, n_spans, n_tokens_removed, clean_text); cached once per " +
-        "(table, w) per session",
+        "(relation content, w)",
       exactSubstringBuilder),
     tvf(FuzzyDecontamName,
       "fuzzy_decontaminate(train_table, probe_table[, tau[, n[, maxDf]]]) - " +
         "containment-based eval-set decontamination ledger (train_id, " +
         "contaminated, n_probe_matches, best_probe_id, max_containment, action); " +
-        "cached once per (tables, tau, n, maxDf) per session",
+        "cached once per (relation contents, tau, n, maxDf)",
       fuzzyDecontamBuilder))
 
   private def tvf(name: String, usage: String, builder: Seq[Expression] => LogicalPlan) =

@@ -475,7 +475,7 @@ class ExtSpec extends AnyFunSuite {
 
   test("cdcPairs: docs sharing chunked material pair up with sane containment") {
     val corpus = Tables.documents(spark, sf)
-    val pairs = Dedup.withCdcPairs(corpus, "doc_id", "text", minShared = 2L)(_.collect())
+    val pairs = Dedup.cdcPairs(corpus, "doc_id", "text", minShared = 2L).collect()
     assert(pairs.nonEmpty, "the synthetic corpus plants shared chunk material")
     pairs.foreach { r =>
       assert(r.getAs[Long]("da") < r.getAs[Long]("db"))
@@ -2541,29 +2541,103 @@ class ExtSpec extends AnyFunSuite {
     assert(spans > 0 && rate > 0.02 && rate < 0.08, s"corruption rate $rate far from ~4.5%")
   }
 
-  test("qualityCalibrated, withPpjoinPairs and withCdcPairs leave nothing pinned in the block manager") {
-    val docs = Tables.documents(spark, sf)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val rep = TextAnalysis.qualityCalibrated(docs, "doc_id", "text", "source", keepMille = 700)
-    assert(rep.count() > 0)
-    val pairs = Dedup.withPpjoinPairs(docs, "doc_id", "text", n = 3, tau = 0.5)(_.count())
-    assert(pairs > 0)
-    val cdc = Dedup.withCdcPairs(docs, "doc_id", "text", minShared = 2L)(_.count())
-    assert(cdc > 0)
-    val cont = Dedup.withContainmentPairs(docs, "doc_id", "text", n = 3, tau = 0.8)(_.count())
-    assert(cont > 0)
-    // the ANN family's scoped forms must release BOTH the outer prep
-    // cache and the banded route's internal vector cache (forced via
-    // maxExactRows = 0)
-    val embs = Tables.embeddings(spark, sf)
-    val lsh = Similarity.withLshPairs(embs, "vec_id", "embedding", tau = 0.4, dims = 64, nBits = 6)(_.count())
-    assert(lsh > 0)
-    val nd = Similarity.withNearDupPairs(embs, "vec_id", "embedding", tau = 0.4, dims = 64, maxExactRows = 0L)(_.count())
-    assert(nd > 0)
-    val xf = Similarity.withNearDupPairsExactFirst(embs, "vec_id", "embedding", tau = 0.4, dims = 64, maxExactRows = 0L)(_.count())
-    assert(xf > 0)
-    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.isEmpty, s"leaked persisted RDDs: $added")
+  /** Runs `body`, drops what it built, and GCs until ContextCleaner has
+    * released every RDD it persisted (60 s deadline). Then no persisted
+    * RDD may be left beside those present before, and the CacheManager
+    * must be empty.
+    */
+  private def assertReleased(body: => Unit): Unit = {
+    import org.apache.spark.graft.SparkInternals
+    val sc = spark.sparkContext
+    spark.catalog.clearCache()
+    val before = sc.getPersistentRDDs.keySet
+    body
+    def added = sc.getPersistentRDDs.keySet -- before
+    def released = SparkInternals.cacheManagerIsEmpty(spark) && added.isEmpty
+    val deadline = System.nanoTime + 60L * 1000 * 1000 * 1000
+    while (!released && System.nanoTime < deadline) {
+      System.gc()
+      Thread.sleep(200)
+    }
+    assert(SparkInternals.cacheManagerIsEmpty(spark), "a Dataset.persist was never released")
+    assert(added.isEmpty, s"persisted RDDs outlived their frames: $added")
+  }
+
+  test("qualityCalibrated and the pair kernels leave nothing pinned once unreachable") {
+    assertReleased {
+      val docs = Tables.documents(spark, sf)
+      val rep = TextAnalysis.qualityCalibrated(docs, "doc_id", "text", "source", keepMille = 700)
+      assert(rep.count() > 0)
+      assert(Dedup.ppjoinPairs(docs, "doc_id", "text", n = 3, tau = 0.5).count() > 0)
+      assert(Dedup.cdcPairs(docs, "doc_id", "text", minShared = 2L).count() > 0)
+      assert(Dedup.containmentPairs(docs, "doc_id", "text", n = 3, tau = 0.8).count() > 0)
+      // the ANN family: the outer prep copy and the banded route's
+      // internal vector copy (forced via maxExactRows = 0)
+      val embs = Tables.embeddings(spark, sf)
+      assert(Similarity.lshPairs(embs, "vec_id", "embedding", tau = 0.4, dims = 64, nBits = 6).count() > 0)
+      assert(Similarity.nearDupPairs(embs, "vec_id", "embedding", tau = 0.4, dims = 64, maxExactRows = 0L).count() > 0)
+      assert(Similarity.nearDupPairsExactFirst(
+        embs, "vec_id", "embedding", tau = 0.4, dims = 64, maxExactRows = 0L).count() > 0)
+    }
+  }
+
+  test("corpus dedup path (minhash, clusters, ppjoin, funnels) pins nothing once unreachable") {
+    assertReleased {
+      val docs = Tables.documents(spark, sf)
+      val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3, tau = 0.3)
+      assert(pairs.collect().nonEmpty)
+      val (members, rounds) = Dedup.clustersWithRounds(pairs)
+      assert(members.collect().nonEmpty && rounds > 0)
+      assert(Dedup.ppjoinPairs(docs, "doc_id", "text", 3, 0.5).collect().nonEmpty)
+      assert(Dedup.ppjoinFunnel(docs, "doc_id", "text", 3, 0.5)("verified_pairs") > 0)
+      assert(Dedup.minhashLshFunnel(docs, "doc_id", "text", n = 3, tau = 0.3)("n_verified_pairs") > 0)
+    }
+  }
+
+  /** Twelve 30-token documents; each (a, b) in `dups` makes b a copy of a
+    * with its last token changed (3-shingle Jaccard 27/29).
+    */
+  private def plantedCorpus(seed: Int, dups: Seq[(Long, Long)]): Seq[(Long, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val base = (1L to 12L).map(id => id -> Seq.fill(30)(s"w${rnd.nextInt(5000)}")).toMap
+    val copied = dups.map { case (a, b) => b -> (base(a).init :+ s"edit$b") }.toMap
+    (1L to 12L).map(id => id -> copied.getOrElse(id, base(id)).mkString(" "))
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.collect().map(r => (r.getAs[Long]("da"), r.getAs[Long]("db"), r.getAs[Double]("jaccard"))).toSet
+
+  test("minhash_pairs over a replaced view returns the new corpus's pairs") {
+    graft.functions.GraftExtensions.install(spark)
+    val first = plantedCorpus(1, Seq(1L -> 2L)).toDF("doc_id", "text")
+    first.createOrReplaceTempView("graft_stale_docs")
+    val before = pairSet(spark.sql("SELECT * FROM minhash_pairs('graft_stale_docs')"))
+    assert(before.map(p => (p._1, p._2)) == Set((1L, 2L)))
+    val second = plantedCorpus(2, Seq(3L -> 4L, 5L -> 9L)).toDF("doc_id", "text")
+    second.createOrReplaceTempView("graft_stale_docs")
+    val after = pairSet(spark.sql("SELECT * FROM minhash_pairs('graft_stale_docs')"))
+    assert(after == pairSet(Dedup.minhashLshPairs(second, "doc_id", "text", tau = 0.5)))
+    assert(after.map(p => (p._1, p._2)) == Set((3L, 4L), (5L, 9L)))
+  }
+
+  test("artifacts of sibling dirs with equal String hashes stay apart; reuse builds nothing") {
+    val root = java.nio.file.Files.createTempDirectory("graft-artifacts").toString
+    val (dirA, dirB) = (s"$root/Aa", s"$root/BB")
+    assert(dirA.hashCode == dirB.hashCode)
+    plantedCorpus(3, Seq(1L -> 2L)).toDF("doc_id", "text").write.parquet(s"$dirA/documents.parquet")
+    plantedCorpus(4, Seq(6L -> 7L)).toDF("doc_id", "text").write.parquet(s"$dirB/documents.parquet")
+    val query = SparkEntry.queries("dedup_minhash_lsh")
+    // build both artifacts before reading either: a shared file name
+    // would let the second build overwrite the first's output
+    val (builtA, builtB) = (query(spark, dirA), query(spark, dirB))
+    val (gotA, gotB) = (pairSet(builtA), pairSet(builtB))
+    def fresh(dir: String) = pairSet(Dedup.minhashLshPairs(
+      Tables.documents(spark, dir), "doc_id", "text", n = 3, perms = 16, bands = 4, tau = 0.3))
+    assert(gotA == fresh(dirA) && gotA.map(p => (p._1, p._2)) == Set((1L, 2L)))
+    assert(gotB == fresh(dirB) && gotB.map(p => (p._1, p._2)) == Set((6L, 7L)))
+    val builds = Artifacts.buildCount
+    assert(pairSet(query(spark, dirA)) == gotA && pairSet(query(spark, dirB)) == gotB)
+    assert(Artifacts.buildCount == builds, "a repeat call on an unchanged dir rebuilt its artifact")
   }
 
   test("imageBlockhash: words match the fill arithmetic; twins pair at 0; markers counted, never paired") {

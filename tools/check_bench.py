@@ -344,10 +344,15 @@ def main(argv):
             print(f"  baseline updated (+{len(missing)} first recordings)")
         else:
             print("  (run with --update to record them)")
-    if not failures:
+    # rows whose run threw carry no time (Bench lists them under "failed");
+    # a failure is never a pass, whatever the timed rows say
+    errored = doc.get("failed", {})
+    for q, e in sorted(errored.items()):
+        print(f"  FAILED RUN {q}: {e}")
+    if not failures and not errored:
         worst = max(shared, key=lambda q: ratios[q] / divisor(q))
         print(f"PASS — worst normalized ratio {ratios[worst]/divisor(worst):.2f}x ({worst})")
-    return 1 if failures else 0
+    return 1 if failures or errored else 0
 
 
 if __name__ == "__main__":
