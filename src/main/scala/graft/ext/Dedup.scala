@@ -5,6 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import scala.jdk.CollectionConverters._
+
 /** Deduplication operators for LLM-training-data pipelines (builder brief).
   *
   * Scale design (100 TB): exact dedup is a hash groupBy (one shuffle,
@@ -18,11 +20,11 @@ import org.apache.spark.sql.functions._
   * can be oracle-checked in SQL.
   *
   * Intermediates: a table that several branches of a kernel's plan read
-  * (the shingle-hash sets, the signature table, the chunk table) is
-  * materialized once with `SqlBridge.persistRows` while the frame is
-  * built. Nothing enters the CacheManager; ContextCleaner releases the
-  * rows once the returned frame is unreachable, and a lost block
-  * recomputes from lineage. So every function here returns a plain
+  * (the shingle-hash sets, the signature table, the chunk table), or that
+  * callers read again (the MinHash pair table), is materialized once with
+  * `SqlBridge.persistRows` while the frame is built. Nothing enters the
+  * CacheManager; ContextCleaner releases the rows once the returned frame
+  * is unreachable, and a lost block recomputes from lineage. So every function here returns a plain
   * frame: there is no scope to enter and nothing to unpersist.
   */
 object Dedup {
@@ -596,8 +598,8 @@ object Dedup {
     * table, the rarest-first prefix rows, the length-filtered candidate
     * pairs and the verified pairs — ONE definition consumed by both
     * `ppjoinPairs` and `ppjoinFunnel` so the funnel's counts can never
-    * drift from the production path (the minhash twin shares
-    * `shingleHashesAndSig` / `bandedKeys` for the same reason).
+    * drift from the production path (the MinHash twin is
+    * `MinhashStages`).
     */
   private final case class PpjoinStages(hashed: DataFrame, prefix: DataFrame, cand: DataFrame, out: DataFrame)
 
@@ -894,24 +896,24 @@ object Dedup {
     math.min(ceilCap.toLong, math.max(floor.toLong, math.ceil(n * frac).toLong)).toInt
   }
 
-  /** MinHash-LSH near-dup pairs: band signatures (bands × rowsPerBand =
-    * perms), equi-join per band for candidates, then EXACT Jaccard
-    * verification on the candidate pairs only. This is the 100 TB path:
-    * the only joins are on short band keys.
-    *
-    * `maxBucket <= 0` (the default) sizes the frequent-bucket cap from
-    * the corpus count via `maxBucketFor` — the production config. Pass an
-    * explicit value only to pin a reproducible layout (oracle replays).
+  /** The shared MinHash-LSH pipeline stages: the materialized signature
+    * table, the frequent-bucket cap, the band-bucket sizes, the capped
+    * candidate pairs and the materialized verified pairs — ONE definition
+    * consumed by both `minhashLshPairs` and `minhashLshFunnel`, so the
+    * funnel's counts can never drift from the production path (the
+    * PPJoin twin is `PpjoinStages`).
     */
-  def minhashLshPairs(
+  private final case class MinhashStages(docs: DataFrame, cap: Int, sizes: DataFrame, cand: DataFrame, out: DataFrame)
+
+  private def minhashStages(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      n: Int = 3,
-      perms: Int = 16,
-      bands: Int = 4,
-      tau: Double = 0.5,
-      maxBucket: Int = 0): DataFrame = {
+      n: Int,
+      perms: Int,
+      bands: Int,
+      tau: Double,
+      maxBucket: Int): MinhashStages = {
     val spark = df.sparkSession
     val rows = perms / bands
     // the signature table (id + hashes + sig, ~1 KB/doc at any scale) is
@@ -929,34 +931,62 @@ object Dedup {
     // dropping such buckets bounds the candidate join at ANY corpus size
     // (standard LSH fan-out protection; exact duplicates that large are
     // `exact` dedup's job).
-    val smallBuckets = banded
-      .groupBy("band", "key")
-      .agg(count(lit(1)).as("_c"))
-      .where(col("_c") <= cap && col("_c") > 1)
-      .select("band", "key")
+    val sizes = banded.groupBy("band", "key").agg(count(lit(1)).as("_c"))
+    val smallBuckets = sizes.where(col("_c") <= cap && col("_c") > 1).select("band", "key")
     val kept = banded.join(smallBuckets, Seq("band", "key"), "left_semi")
-    val candidates = kept.as("a")
+    val cand = kept.as("a")
       .join(kept.as("b"), col("a.band") === col("b.band") && col("a.key") === col("b.key") && col("a.id") < col("b.id"))
       .select(col("a.id").as("da"), col("b.id").as("db"))
       .distinct()
-    // verify candidates with exact Jaccard over the (sorted) shingle-hash sets
+    // verify candidates with exact Jaccard over the (sorted) shingle-hash
+    // sets; the verified pairs are materialized too, so the caller's
+    // action and a `clusters` over them read one copy instead of each
+    // re-running the banding, candidate and verify stages
     val sets = docs.select(col("id"), col("hs"))
-    candidates
+    val out = persistRows(cand
       .join(sets.select(col("id").as("da"), col("hs").as("sha")), "da")
       .join(sets.select(col("id").as("db"), col("hs").as("shb")), "db")
       .withColumn("i", size(array_intersect(col("sha"), col("shb"))))
       .withColumn("jaccard", col("i").cast("double") / (size(col("sha")) + size(col("shb")) - col("i")))
       .where(col("jaccard") >= tau)
-      .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard"))
+      .select(col("da"), col("db"), round(col("jaccard"), 4).as("jaccard")))
+    MinhashStages(docs, cap, sizes, cand, out)
   }
+
+  /** MinHash-LSH near-dup pairs: band signatures (bands × rowsPerBand =
+    * perms), equi-join per band for candidates, then EXACT Jaccard
+    * verification on the candidate pairs only. This is the 100 TB path:
+    * the only joins are on short band keys.
+    *
+    * `maxBucket <= 0` (the default) sizes the frequent-bucket cap from
+    * the corpus count via `maxBucketFor` — the production config. Pass an
+    * explicit value only to pin a reproducible layout (oracle replays).
+    *
+    * The whole pipeline runs while the frame is built: the signature
+    * table and the verified pairs are both materialized with
+    * `persistRows`, so the returned frame is a read of stored rows. Every
+    * action on it, and a `clusters` over it, reads that one copy; nothing
+    * re-runs the banding, candidate or verify stages.
+    */
+  def minhashLshPairs(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      n: Int = 3,
+      perms: Int = 16,
+      bands: Int = 4,
+      tau: Double = 0.5,
+      maxBucket: Int = 0): DataFrame =
+    minhashStages(df, idCol, textCol, n, perms, bands, tau, maxBucket).out
 
   /** Candidate-funnel diagnostics for the MinHash-LSH path: the counts a
     * scale probe needs to VERIFY (not infer from wall time) that the
     * banding stays bounded as the corpus grows — banded rows, colliding
     * buckets, buckets dropped by the frequent-bucket cap, distinct
-    * candidate pairs after the cap, and exact-verified pairs. Same
-    * pipeline stages as `minhashLshPairs`, instrumented with counts;
-    * driver-side by design (a handful of scalar aggregates).
+    * candidate pairs after the cap, and exact-verified pairs. Shares the
+    * pipeline with `minhashLshPairs` via `minhashStages`; the document and
+    * verified-pair counts are the row counts of its materialized tables,
+    * the bucket counts one aggregate and the candidates one count.
     */
   def minhashLshFunnel(
       df: DataFrame,
@@ -967,41 +997,18 @@ object Dedup {
       bands: Int = 4,
       tau: Double = 0.5,
       maxBucket: Int = 0): Map[String, Long] = {
-    val spark = df.sparkSession
-    val rows = perms / bands
-    val docs = persistRows(shingleHashesAndSig(
-      df.repartition(spark.sparkContext.defaultParallelism, col(idCol)), idCol, textCol, n, perms))
-    val nDocs = persistedRowCount(docs)
-    val cap = if (maxBucket > 0) maxBucket else maxBucketFor(nDocs)
-    val banded = bandedKeys(docs, bands, rows)
-    val sizes = persistRows(banded.groupBy("band", "key").agg(count(lit(1)).as("_c")))
-    val nBuckets = persistedRowCount(sizes)
-    val nMulti = sizes.where(col("_c") > 1).count()
-    val nCapped = sizes.where(col("_c") > cap).count()
-    val small = sizes.where(col("_c") <= cap && col("_c") > 1).select("band", "key")
-    val kept = banded.join(small, Seq("band", "key"), "left_semi")
-    val candidates = persistRows(kept.as("a")
-      .join(kept.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") && col("a.id") < col("b.id"))
-      .select(col("a.id").as("da"), col("b.id").as("db"))
-      .distinct())
-    val nCand = persistedRowCount(candidates)
-    val sets = docs.select(col("id"), col("hs"))
-    val nVerified = candidates
-      .join(sets.select(col("id").as("da"), col("hs").as("sha")), "da")
-      .join(sets.select(col("id").as("db"), col("hs").as("shb")), "db")
-      .withColumn("i", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("jaccard", col("i").cast("double") / (size(col("sha")) + size(col("shb")) - col("i")))
-      .where(col("jaccard") >= tau)
-      .count()
+    val st = minhashStages(df, idCol, textCol, n, perms, bands, tau, maxBucket)
+    val b = st.sizes
+      .agg(count(lit(1)), count(when(col("_c") > 1, 1)), count(when(col("_c") > st.cap, 1)))
+      .head()
     Map(
-      "n_docs" -> nDocs,
-      "max_bucket" -> cap.toLong,
-      "n_buckets" -> nBuckets,
-      "n_buckets_multi" -> nMulti,
-      "n_buckets_capped" -> nCapped,
-      "n_candidate_pairs" -> nCand,
-      "n_verified_pairs" -> nVerified)
+      "n_docs" -> persistedRowCount(st.docs),
+      "max_bucket" -> st.cap.toLong,
+      "n_buckets" -> b.getLong(0),
+      "n_buckets_multi" -> b.getLong(1),
+      "n_buckets_capped" -> b.getLong(2),
+      "n_candidate_pairs" -> st.cand.count(),
+      "n_verified_pairs" -> persistedRowCount(st.out))
   }
 
   /** Duplicate-cluster assembly: connected components over an undirected
@@ -1009,17 +1016,27 @@ object Dedup {
     * / `ngramJaccardPairs`), labeling every member with the cluster's
     * minimum doc id — the canonical document a dedup pipeline keeps.
     *
-    * Algorithm: iterative min-label propagation with a path-halving
-    * shortcut (each round, a node takes the min of its own label, its
-    * neighbors' labels, and its label's label). Everything is an
-    * equi-join shuffle on the pair list — never adjacency
-    * materialization beyond the input edges — and the shortcut makes the
-    * round count ~log(component diameter), so a 100 TB corpus with
-    * million-member duplicate clusters converges in a handful of rounds.
-    * Labels only decrease, so the fixpoint (and hence the result) is
-    * deterministic at any partitioning, retry schedule, or cluster size.
-    * Each round materializes its label table and drops the previous one:
-    * lineage stays O(1) deep.
+    * Algorithm: two-phase, after Kiveris et al., "Connected Components in
+    * MapReduce and Beyond" (SoCC 2014).
+    *  (1) Seed: one typed pass over the symmetric edge table runs
+    *     union-find inside each partition and emits (node, minimum id of
+    *     its partition-local component); the per-node minimum of those
+    *     seeds is the starting label table. A component whose edges all
+    *     sit in one partition is already labelled exactly here.
+    *  (2) Repair: rounds of min-label propagation with a path-halving
+    *     shortcut (each node takes the min of its own label, its
+    *     neighbors' labels, and its label's label) until the label sum
+    *     stops changing. These rounds only join up components that span
+    *     partitions, so the round count measures that spread, not the
+    *     component diameter: with one edge partition the first round
+    *     already finds the fixpoint.
+    * Everything is an equi-join shuffle on the pair list — never
+    * adjacency materialization beyond the input edges. Labels only
+    * decrease and a local component minimum does not depend on row
+    * order, so the fixpoint (and hence the result) is deterministic at
+    * any partitioning, retry schedule, or cluster size. Each round
+    * materializes its label table and drops the previous one: lineage
+    * stays O(1) deep.
     *
     * Returns (doc_id, canonical_id, cluster_size) for every doc that
     * appears in a pair (singletons are trivially their own canonical and
@@ -1032,26 +1049,32 @@ object Dedup {
       maxIter: Int = 25): DataFrame =
     clustersWithRounds(pairs, aCol, bCol, maxIter)._1
 
-  /** `clusters` plus the number of propagation rounds it ran — the loop
-    * is eager (each round's label table is materialized), so the count is
-    * exact at return. Scale probes assert the ~log(diameter) round bound
-    * here instead of inferring it from wall time.
+  /** `clusters` plus the number of repair rounds it ran — the loop is
+    * eager (each round's label table is materialized), so the count is
+    * exact at return. It counts the rounds the partition-seeded labels
+    * needed to reach the fixpoint: 1 when no component spans partitions,
+    * more as components spread across them.
     */
   def clustersWithRounds(
       pairs: DataFrame,
       aCol: String = "da",
       bCol: String = "db",
       maxIter: Int = 25): (DataFrame, Int) = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
     // Truncate lineage at every materialization point: a persist() alone
-    // keeps the FULL logical plan (the whole MinHash DAG under `pairs`,
+    // keeps the FULL logical plan (the whole pair pipeline under `pairs`,
     // plus one join-tree layer per round), and Catalyst re-analyzes and
     // re-optimizes that ever-deeper tree each round — measured seconds of
     // driver time per round on a 500-node graph. `persistRows` gives every
     // iteration a flat plan over the rows it materialized. On a real
     // cluster swap it for reliable checkpoint() to the cluster FS — same
-    // shape.
-    val p = persistRows(pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")))
-    val edges = persistRows(p.union(p.select(col("dst").as("src"), col("src").as("dst"))))
+    // shape. The symmetric edge table is built in one read of `pairs`
+    // (both directions of a pair from the same row, so they share a
+    // partition); `minhashLshPairs` output is itself stored rows.
+    val edges = persistRows(pairs.select(inline(array(
+      struct(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst")),
+      struct(col(bCol).cast("long").as("src"), col(aCol).cast("long").as("dst"))))))
     // exact decimal sum of labels, observed on the run that materializes
     // the label table: labels only ever DECREASE, so an unchanged sum ⇔ a
     // fixpoint — convergence costs no job of its own. sum() over zero rows
@@ -1062,8 +1085,12 @@ object Dedup {
       val m = persistRows(df.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s")))
       (m, Option(obs.get("s")).fold(java.math.BigDecimal.ZERO)(_.asInstanceOf[java.math.BigDecimal]))
     }
-    var (labels, prevSum) = withLabelSum(
-      edges.select(col("src").as("id")).distinct().withColumn("label", col("id")))
+    // seed: partition-local union-find, then the per-node minimum over
+    // the partitions a node's edges fall in
+    val seeds = edges.as[(Long, Long)]
+      .mapPartitions(it => componentMins(it).asScala.iterator)
+      .toDF("id", "label")
+    var (labels, prevSum) = withLabelSum(seeds.groupBy("id").agg(min("label").as("label")))
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -1096,9 +1123,8 @@ object Dedup {
       prevSum = s
       i += 1
     }
-    // the result depends only on the final label table; the edge tables
-    // were round-loop inputs
-    releaseRows(p)
+    // the result depends only on the final label table; the edge table
+    // was a round-loop input
     releaseRows(edges)
     if (!converged)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1140,6 +1166,35 @@ object Dedup {
           deltaPairs.select(col(aCol).cast("long").as("da"), col(bCol).cast("long").as("db"))),
       maxIter = maxIter)
 
+  /** Union-find over an edge stream: every node of `edges` → the minimum
+    * id of its connected component. A union links the larger root under
+    * the smaller, so every root IS its component's minimum and the result
+    * does not depend on edge order; path compression keeps finds short.
+    * The one implementation behind `clustersWithRounds`' per-partition
+    * seed pass and `clustersRouted`' driver route.
+    */
+  private def componentMins(edges: Iterator[(Long, Long)]): java.util.HashMap[Long, Long] = {
+    val parent = new java.util.HashMap[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.get(r) != r) r = parent.get(r)
+      var c = x
+      while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      parent.putIfAbsent(a, a)
+      parent.putIfAbsent(b, b)
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
+    }
+    // resolve every node to its root; replacing a value is no structural
+    // change, so the iteration stays valid while find compresses paths
+    val it = parent.entrySet.iterator
+    while (it.hasNext) { val e = it.next(); e.setValue(find(e.getKey)) }
+    parent
+  }
+
   /** Edge-count cap for the driver union-find route. Honest budget at
     * the cap: the typed collect lands specialized (Long, Long) tuples
     * (~32 B/edge ≈ 8 MB) but the boxed HashMap union-find costs
@@ -1167,8 +1222,8 @@ object Dedup {
       bCol: String = "db",
       maxLocalEdges: Int = MaxLocalClusterEdges,
       maxIter: Int = 25): DataFrame = {
-    val spark0 = pairs.sparkSession
-    import spark0.implicits._
+    val spark = pairs.sparkSession
+    import spark.implicits._
     val p = pairs.select(col(aCol).cast("long").as("src"), col(bCol).cast("long").as("dst"))
     // limit(cap + 1): if more rows exist we only learn "too many" (and
     // fall back to the distributed loop, re-reading the input); within
@@ -1178,37 +1233,11 @@ object Dedup {
     val probe = p.as[(Long, Long)].limit(maxLocalEdges + 1).collect()
     if (probe.length > maxLocalEdges) clusters(pairs, aCol, bCol, maxIter)
     else {
-      val spark = pairs.sparkSession
-      // union-find with path compression; roots are arbitrary, the
-      // canonical min id and exact component size are derived after —
-      // deterministic regardless of union order
-      val parent = new java.util.HashMap[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.get(r) != r) r = parent.get(r)
-        var c = x
-        while (parent.get(c) != r) { val n = parent.get(c); parent.put(c, r); c = n }
-        r
-      }
-      probe.foreach { case (a, b) =>
-        if (!parent.containsKey(a)) parent.put(a, a)
-        if (!parent.containsKey(b)) parent.put(b, b)
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-      val minOf = new java.util.HashMap[Long, Long]
-      val sizeOf = new java.util.HashMap[Long, Long]
-      val nodes = parent.keySet.toArray(new Array[java.lang.Long](0))
-      nodes.foreach { n =>
-        val r = find(n)
-        minOf.merge(r, n.longValue, (x, y) => math.min(x, y))
-        sizeOf.merge(r, 1L, (x, y) => x + y): Unit
-      }
-      import spark.implicits._
-      nodes.map { n =>
-        val r = find(n)
-        (n.longValue, minOf.get(r).longValue, sizeOf.get(r).longValue)
-      }.toSeq.toDF("doc_id", "canonical_id", "cluster_size")
+      // the canonical min id comes straight from the union-find; the
+      // exact component size is counted from it
+      val minOf = componentMins(probe.iterator).asScala
+      val sizeOf = minOf.values.groupMapReduce(identity)(_ => 1L)(_ + _)
+      minOf.toSeq.map { case (n, m) => (n, m, sizeOf(m)) }.toDF("doc_id", "canonical_id", "cluster_size")
     }
   }
 

@@ -196,8 +196,9 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("clusters: connected components label every member with the component min") {
-    // three components, one of them a 6-node chain (forces >1 round
-    // without the path-halving shortcut collapsing it immediately)
+    // three components, one of them a 6-node chain (a local Seq spreads
+    // its edges over several partitions, so the per-partition seeds split
+    // the chain and the repair rounds have to join it)
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), // chain → canonical 1
       (10L, 11L),                                       // pair → canonical 10
@@ -242,8 +243,9 @@ class ExtSpec extends AnyFunSuite {
   }
 
   test("clustersRouted: driver union-find route equals the distributed fixpoint loop") {
-    // chain + pair + triangle — the chain forces multi-round propagation
-    // on the distributed side, so equality is a real fixpoint check
+    // chain + pair + triangle — spread over several partitions, the
+    // chain's seeds are partial and the distributed side runs repair
+    // rounds, so equality is a real fixpoint check
     val pairs = Seq(
       (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
       (10L, 11L),
@@ -265,7 +267,8 @@ class ExtSpec extends AnyFunSuite {
 
   test("clusters releases superseded per-round storage (bounded cache)") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    // a 9-node chain needs several label-propagation rounds
+    // a 9-node chain whose edges a local Seq spreads over several
+    // partitions needs several repair rounds
     val pairs = (1L to 8L).map(i => (i, i + 1)).toDF("da", "db")
     Dedup.clusters(pairs).collect()
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
@@ -283,6 +286,79 @@ class ExtSpec extends AnyFunSuite {
     assert(ps.nonEmpty)
     ps.foreach { case (a, b) => assert(cl(a) == cl(b), s"pair ($a,$b) split across clusters") }
     cl.foreach { case (id, c) => assert(c <= id && cl(c) == c, s"canonical $c of $id not a fixpoint") }
+  }
+
+  /** Spark jobs and completed shuffle map stages while `body` ran. */
+  private def jobsAndShuffleStages[T](body: => T): (T, Int, Int) = {
+    import org.apache.spark.graft.SparkInternals
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val shuffleStages = new java.util.concurrent.atomic.AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet(): Unit
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (SparkInternals.isShuffleMapStage(e.stageInfo)) shuffleStages.incrementAndGet(): Unit
+    }
+    SparkInternals.drainListeners(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      SparkInternals.drainListeners(sc)
+      (out, jobs.get, shuffleStages.get)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("minhashLshPairs is materialized once: a later query and clusters re-run no pair stage") {
+    val d = Tables.documents(spark, sf)
+    val pairs = Dedup.minhashLshPairs(d, "doc_id", "text", 3, 16, 4, 0.3)
+    val first = pairs.collect()
+    assert(first.nonEmpty)
+    // a new query over a lazy pair plan plans and runs the banding,
+    // candidate and verify stages again (several jobs with shuffle
+    // stages); over stored rows it is one scan
+    val (again, jobs, shuffleStages) = jobsAndShuffleStages(pairs.select("da", "db").collect())
+    assert(again.toSet == first.map(r => org.apache.spark.sql.Row(r.get(0), r.get(1))).toSet)
+    assert(jobs == 1 && shuffleStages == 0, s"a second query over the pairs ran $jobs jobs and $shuffleStages shuffle stages")
+    // the clustering reads the stored pairs too; over a lazy pair plan
+    // it ran 21 jobs here (the pipeline again under its edge copy, then
+    // rounds seeded with identity labels), over stored rows 10
+    val (_, clusterJobs, _) = jobsAndShuffleStages(Dedup.clustersWithRounds(pairs)._1.collect())
+    assert(clusterJobs <= 10, s"clustersWithRounds + collect ran $clusterJobs jobs")
+  }
+
+  test("clusters is exact at any partitioning; one edge partition converges in one round") {
+    def unionFind(edges: Seq[(Long, Long)]): Map[Long, (Long, Long)] = {
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        var r = x
+        while (parent.getOrElse(r, r) != r) r = parent(r)
+        r
+      }
+      edges.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+      val size = nodes.groupBy(find).map { case (r, ns) => r -> ns.size.toLong }
+      nodes.map(n => n -> ((find(n), size(find(n))))).toMap
+    }
+    val path = new scala.util.Random(11).shuffle((1L until 2000L).map(i => (i, i + 1)))
+    val mixed = Seq(
+      (1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (5L, 6L),
+      (10L, 11L),
+      (21L, 20L), (22L, 21L), (20L, 22L))
+    for ((edges, name) <- Seq(path -> "path", mixed -> "chain+pair+triangle"); parts <- Seq(1, 3, 8)) {
+      val (out, rounds) = Dedup.clustersWithRounds(edges.toDF("da", "db").repartition(parts))
+      val got = out.collect()
+        .map(r => r.getAs[Long]("doc_id") -> ((r.getAs[Long]("canonical_id"), r.getAs[Long]("cluster_size"))))
+        .toMap
+      assert(got == unionFind(edges), s"$name at $parts partitions")
+      // one partition: the seed pass sees every edge, so the first repair
+      // round finds the fixpoint; spread over 8 the rounds still run
+      if (parts == 1) assert(rounds == 1, s"$name at 1 partition ran $rounds rounds")
+      if (parts == 8) assert(rounds > 1, s"$name at 8 partitions ran $rounds rounds")
+    }
   }
 
   test("stratified sampling caps each group deterministically; other groups don't disturb picks") {

@@ -13,6 +13,9 @@ object SparkInternals {
   def cacheManagerIsEmpty(spark: SparkSession): Boolean =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager.isEmpty
 
+  /** True for a stage that writes shuffle output (a shuffle map stage). */
+  def isShuffleMapStage(info: org.apache.spark.scheduler.StageInfo): Boolean = info.shuffleDepId.isDefined
+
   /** Removes every stored block of an RDD, as if the executors holding them
     * were lost; the RDD stays registered as persisted. */
   def dropRddBlocks(sc: SparkContext, rddId: Int): Unit =
