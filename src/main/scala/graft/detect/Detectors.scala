@@ -588,24 +588,6 @@ object Detectors {
         coalesce(col("refinedExactTsMs"), col("exactTsMs")).as("exactTsMs"))
   }
 
-  /** Full pipeline for one algorithm: guard → score → threshold →
-    * sessionize (unless score_only, D14) → refine (D13, if configured).
-    */
-  def detect(points: Dataset[TsSample], cfg: DetectorConfig, baseline: Option[DataFrame] = None): DataFrame = {
-    import points.sparkSession.implicits._
-    val guarded = minPointsGuard(points).as[TsSample]
-    val scores = score(guarded, cfg, baseline)
-    if (cfg.scoreOnly) scores
-    else {
-      val wins = anomalies(withThreshold(scores, cfg))
-      cfg.refineAlgorithmName match {
-        case Some(refineName) =>
-          refineExact(guarded, wins, cfg.copy(algorithmName = refineName, refineAlgorithmName = None))
-        case None => wins
-      }
-    }
-  }
-
   /** D9 escape hatch: user-registered scoring strategies, the Spark
     * analogue of the reference's `algorithm_class`
     * (/root/reference/potoos/models/config.py:90,99-100). A strategy maps

@@ -1,24 +1,19 @@
 package graft.streaming
 
 import graft.config.Constants
+import graft.detect.StatPoint
 import graft.model.{Anomaly, TsSample}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import scala.reflect.ClassTag
+import scala.reflect.runtime.universe.TypeTag
 
 /** Carried EMA state per series key. */
 final case class EmaState(ema: Double, lastTsMs: Long, lastValue: Double, n: Long)
 
 /** One streaming score record. */
 final case class StreamScore(seriesKey: String, tsMs: Long, value: Double, ema: Double, dev: Double)
-
-/** TsSample plus the watermarked event-time column. */
-final case class TimedSample(seriesKey: String, tsMs: Long, value: Double, eventTime: java.sql.Timestamp)
-
-/** StreamScore plus the watermarked event-time column. */
-final case class TimedScore(
-    seriesKey: String, tsMs: Long, value: Double, ema: Double, dev: Double,
-    eventTime: java.sql.Timestamp)
 
 /** Carried arrival-ordinal state per series key (O(1)) — the phase
   * continuation counter of the seasonal-residual monitor.
@@ -57,15 +52,8 @@ final case class CtrlFlags(
     seriesKey: String, tsMs: Long, value: Double,
     r1_beyond3: Boolean, r2_2of3_2sigma: Boolean, r3_4of5_1sigma: Boolean, r4_run8: Boolean)
 
-/** TimedSample enriched with the integer calibration stats (n, S, D). */
-final case class CtrlTimedSample(
-    seriesKey: String, tsMs: Long, value: Double, n: Long, s: Long, d: Long,
-    eventTime: java.sql.Timestamp)
-
-/** TimedSample enriched with the calibration stats (stream-static join). */
-final case class StatTimedSample(
-    seriesKey: String, tsMs: Long, value: Double, mu: Double, sd: Double,
-    eventTime: java.sql.Timestamp)
+/** Sample enriched with the integer control-chart calibration stats (n, S, D). */
+final case class CtrlPoint(seriesKey: String, tsMs: Long, value: Double, n: Long, s: Long, d: Long)
 
 /** Structured-Streaming upgrade of the reference's polling `monitor()`
   * loop (/root/reference/potoos/client.py:113-139, polled per
@@ -130,51 +118,79 @@ object MonitorStream {
         col("n_events"))
   }
 
-  /** Shared stateful-scoring harness: watermarked event time + per-key
-    * EmaState with an EVENT-TIME TTL. At unbounded key cardinality dead
-    * series must leave the state store — each batch re-arms a timeout
-    * `stateTtlMs` past the key's newest event; when the watermark passes it
-    * the state is dropped (a returning key re-seeds from scratch). Within
-    * each micro-batch the group's rows are sorted by event time.
+  /** The one event-time state loop every per-key monitor below runs on.
+    * `points` gains the watermarked `eventTime` column (`enrich` then
+    * joins calibration stats onto the watermarked rows) and is grouped
+    * by series key into per-key state with an EVENT-TIME TTL. At
+    * unbounded key cardinality dead series must leave the state store —
+    * each batch re-arms a timeout `stateTtlMs` past the key's newest
+    * accepted event; when the watermark passes it, `expire` emits what
+    * the state still owes and the state is dropped (a returning key
+    * re-seeds from scratch). Within each micro-batch the group's rows
+    * are sorted by (tsMs, `tieBreak`) and a point at or before the key's
+    * last accepted ts is dropped as late or duplicate (so the smaller
+    * tie-break wins a duplicated ts). The last accepted ts starts at the
+    * state's `lastTsMs` and advances on every accepted point, whether or
+    * not `step` keeps state for it; `step` folds one accepted point into
+    * the state (`None` removes it) and emits at most one record.
     */
-  private def statefulScores(
-      points: Dataset[TsSample],
+  private def eventTimeLoop[
+      P <: Product : TypeTag : ClassTag, S <: Product : TypeTag, O <: Product : TypeTag](
+      points: Dataset[_],
       watermarkDelay: String,
-      stateTtlMs: Long)(
-      step: (EmaState, TimedSample) => (EmaState, Option[StreamScore])): Dataset[StreamScore] = {
+      stateTtlMs: Long,
+      key: P => String,
+      tsMs: P => Long,
+      tieBreak: P => Double,
+      lastTsMs: S => Long,
+      enrich: DataFrame => DataFrame = (df: DataFrame) => df,
+      expire: (String, S) => Option[O] = (_: String, _: S) => None)(
+      step: (Option[S], P) => (Option[S], Option[O])): Dataset[O] = {
     val spark = points.sparkSession
     import spark.implicits._
-    points.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[TimedSample]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[EmaState, StreamScore](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[TimedSample], state: GroupState[EmaState]) =>
+    enrich(
+      points.toDF()
+        .withColumn("eventTime", timestamp_millis(col("tsMs")))
+        .withWatermark("eventTime", watermarkDelay))
+      .as[P]
+      .groupByKey(key)
+      .flatMapGroupsWithState[S, O](OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+        (k: String, rows: Iterator[P], state: GroupState[S]) =>
           if (state.hasTimedOut) {
+            val tail = state.getOption.flatMap(expire(k, _))
             state.remove() // dead series: free the state store slot
-            Iterator.empty
+            tail.iterator
           } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.value))
-            var st = state.getOption.getOrElse(EmaState(0.0, Long.MinValue, 0.0, 0L))
-            val out = batch.iterator.flatMap { p =>
-              if (p.tsMs <= st.lastTsMs) Iterator.empty // drop late/dup events
-              else {
-                val (next, score) = step(st, p)
+            var st = state.getOption
+            var lastTs = st.map(lastTsMs).getOrElse(Long.MinValue)
+            val out = Vector.newBuilder[O]
+            rows.toArray.sortBy(p => (tsMs(p), tieBreak(p))).foreach { p =>
+              if (tsMs(p) > lastTs) { // drop late/dup events
+                lastTs = tsMs(p)
+                val (next, o) = step(st, p)
                 st = next
-                score.iterator
+                out ++= o
               }
-            }.toVector
-            state.update(st)
+            }
+            st match {
+              case Some(s) => state.update(s)
+              case None => if (state.exists) state.remove()
+            }
             // must stay ahead of the watermark or Spark rejects the arm
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsMs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.iterator
+            state.setTimeoutTimestamp(math.max(lastTs + stateTtlMs, state.getCurrentWatermarkMs() + 1))
+            out.result().iterator
           }
       }
   }
+
+  /** A loop step for the monitors that always carry state and score every
+    * accepted point: an absent state starts at `init`.
+    */
+  private def seeded[S, P, O](init: S)(f: (S, P) => (S, O)): (Option[S], P) => (Option[S], Option[O]) =
+    (st, p) => {
+      val (next, out) = f(st.getOrElse(init), p)
+      (Some(next), Some(out))
+    }
 
   /** Per-key streaming EMA scoring: the streaming twin of ExpAvgKernel.
     * The EMA carries across batches in the state store and expires
@@ -188,11 +204,13 @@ object MonitorStream {
       alpha: Double = Constants.DefaultSmoothingFactor,
       watermarkDelay: String = "10 minutes",
       stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[StreamScore] =
-    statefulScores(points, watermarkDelay, stateTtlMs) { (st, p) =>
-      val ema = if (st.n == 0L) p.value else alpha * p.value + (1 - alpha) * st.ema
-      (EmaState(ema, p.tsMs, p.value, st.n + 1),
-        Some(StreamScore(p.seriesKey, p.tsMs, p.value, ema, math.abs(p.value - ema))))
-    }
+    eventTimeLoop[TsSample, EmaState, StreamScore](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs)(
+      seeded(EmaState(0.0, Long.MinValue, 0.0, 0L)) { (st, p) =>
+        val ema = if (st.n == 0L) p.value else alpha * p.value + (1 - alpha) * st.ema
+        (EmaState(ema, p.tsMs, p.value, st.n + 1),
+          StreamScore(p.seriesKey, p.tsMs, p.value, ema, math.abs(p.value - ema)))
+      })
 
   /** Streaming derivative scoring: carries (prev point, derivative EMA)
     * per key across micro-batches — the streaming twin of
@@ -206,19 +224,21 @@ object MonitorStream {
       alpha: Double = Constants.DefaultSmoothingFactor,
       watermarkDelay: String = "10 minutes",
       stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[StreamScore] =
-    statefulScores(points, watermarkDelay, stateTtlMs) { (st, p) =>
-      if (st.n == 0L) {
-        // first point: derivative undefined until the second arrives;
-        // streaming emits dev 0 immediately (cannot hold lookahead)
-        (EmaState(0.0, p.tsMs, p.value, 1L), Some(StreamScore(p.seriesKey, p.tsMs, p.value, 0.0, 0.0)))
-      } else {
-        val dtS = (p.tsMs - st.lastTsMs) / 1000.0
-        val d = math.abs(if (dtS != 0) (p.value - st.lastValue) / dtS else p.value - st.lastValue)
-        val ema = if (st.n == 1L) d else alpha * d + (1 - alpha) * st.ema
-        (EmaState(ema, p.tsMs, p.value, st.n + 1),
-          Some(StreamScore(p.seriesKey, p.tsMs, p.value, ema, math.abs(d - ema))))
-      }
-    }
+    eventTimeLoop[TsSample, EmaState, StreamScore](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs)(
+      seeded(EmaState(0.0, Long.MinValue, 0.0, 0L)) { (st, p) =>
+        if (st.n == 0L) {
+          // first point: derivative undefined until the second arrives;
+          // streaming emits dev 0 immediately (cannot hold lookahead)
+          (EmaState(0.0, p.tsMs, p.value, 1L), StreamScore(p.seriesKey, p.tsMs, p.value, 0.0, 0.0))
+        } else {
+          val dtS = (p.tsMs - st.lastTsMs) / 1000.0
+          val d = math.abs(if (dtS != 0) (p.value - st.lastValue) / dtS else p.value - st.lastValue)
+          val ema = if (st.n == 1L) d else alpha * d + (1 - alpha) * st.ema
+          (EmaState(ema, p.tsMs, p.value, st.n + 1),
+            StreamScore(p.seriesKey, p.tsMs, p.value, ema, math.abs(d - ema)))
+        }
+      })
 
   /** Streaming exact dedup — the streaming twin of Dedup.exact for
     * ingest-time dedup of a document/event feed. State is one entry per
@@ -238,34 +258,6 @@ object MonitorStream {
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(dedupCols)
 
-  /** Streaming anomaly flags with an absolute threshold on the raw EMA
-    * deviation (D6-style in-stream thresholding).
-    */
-  def monitorStream(points: Dataset[TsSample], scoreThreshold: Double, alpha: Double = Constants.DefaultSmoothingFactor): DataFrame =
-    emaScores(points, alpha)
-      .toDF()
-      .withColumn("isAnomaly", col("dev") > scoreThreshold)
-
-  /** Config-driven streaming monitor: accepts the batch `DetectorConfig`
-    * and enforces the streaming contract (SURVEY §7.5, D11) instead of
-    * silently diverging from batch:
-    *
-    *  - THRESHOLD: the percent-of-max form needs the WHOLE series — on
-    *    an unbounded stream only the absolute `score_threshold` is
-    *    computable. Mirroring batch precedence (`Detectors.withThreshold`:
-    *    absolute wins when both are set), an absolute threshold is
-    *    accepted whatever else the config carries; a config that would
-    *    RESOLVE to pct-of-max (explicitly, or implicitly by leaving both
-    *    unset — the batch default) is rejected loudly.
-    *  - ALGORITHM: dispatched like batch `Detectors.score` for the two
-    *    kernels with streaming twins (exp_avg, derivative); anything
-    *    else is rejected rather than scored with the wrong kernel.
-    *  - SCORES are the RAW kernel deviations (emaScores/derivativeScores
-    *    docs): the batch stddev normalization needs the whole series, so
-    *    the threshold here applies to |v−ema| (resp. |d−ema(d)|), NOT
-    *    the batch normalized score — the documented batch/stream
-    *    divergence; pick the threshold for the raw-dev scale.
-    */
   /** Streaming two-sided CUSUM changepoint scoring — the streaming twin
     * of `Detectors.cusumScores`, with the standardization baseline as an
     * explicit CALIBRATION input: a stream cannot compute whole-series
@@ -284,43 +276,16 @@ object MonitorStream {
       stats: DataFrame, // (seriesKey, mu, sd)
       slack: Double = Constants.CusumSlack,
       watermarkDelay: String = "10 minutes",
-      stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[CusumScore] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .join(broadcast(stats.select(col("seriesKey"), col("mu"), col("sd"))), Seq("seriesKey"))
-      .select(col("seriesKey"), col("tsMs"), col("value"), col("mu"), col("sd"), col("eventTime"))
-      .as[StatTimedSample]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[CusumState, CusumScore](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[StatTimedSample], state: GroupState[CusumState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.value))
-            var st = state.getOption.getOrElse(CusumState(0.0, 0.0, Long.MinValue))
-            val out = batch.iterator.flatMap { p =>
-              if (p.tsMs <= st.lastTsMs) Iterator.empty
-              else {
-                val z = if (p.sd > 0) (p.value - p.mu) / p.sd else p.value - p.mu
-                val sp = math.max(0.0, st.sp + z - slack)
-                val sn = math.max(0.0, st.sn - z - slack)
-                st = CusumState(sp, sn, p.tsMs)
-                Iterator.single(CusumScore(p.seriesKey, p.tsMs, p.value, sp, sn, math.max(sp, sn)))
-              }
-            }.toVector
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsMs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.iterator
-          }
-      }
-  }
+      stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[CusumScore] =
+    eventTimeLoop[StatPoint, CusumState, CusumScore](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs,
+      enrich = _.join(broadcast(stats.select(col("seriesKey"), col("mu"), col("sd"))), Seq("seriesKey")))(
+      seeded(CusumState(0.0, 0.0, Long.MinValue)) { (st, p) =>
+        val z = if (p.sd > 0) (p.value - p.mu) / p.sd else p.value - p.mu
+        val sp = math.max(0.0, st.sp + z - slack)
+        val sn = math.max(0.0, st.sn - z - slack)
+        (CusumState(sp, sn, p.tsMs), CusumScore(p.seriesKey, p.tsMs, p.value, sp, sn, math.max(sp, sn)))
+      })
 
   /** Streaming Holt-Winters (level + trend + additive seasonality) — the
     * streaming twin of `Detectors.hwScores`'s kernel. The per-key state is
@@ -344,52 +309,25 @@ object MonitorStream {
       watermarkDelay: String = "10 minutes",
       stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[StreamScore] = {
     require(period >= 2, s"period must be >= 2, got $period")
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[TimedSample]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[HwState, StreamScore](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[TimedSample], state: GroupState[HwState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.value))
-            var st = state.getOption.getOrElse(
-              HwState(0.0, 0.0, Vector.fill(period)(0.0), 0L, Long.MinValue))
-            val out = batch.iterator.flatMap { p =>
-              if (p.tsMs <= st.lastTsMs) Iterator.empty
-              else {
-                val i = st.i + 1
-                val j = ((i - 1) % period).toInt
-                if (i == 1L) {
-                  // seed: l = v, b = 0, slots stay 0 (the kernel's touched
-                  // slot computes to exactly 0.0)
-                  st = HwState(p.value, 0.0, st.s, i, p.tsMs)
-                  Iterator.single(StreamScore(p.seriesKey, p.tsMs, p.value, p.value, 0.0))
-                } else {
-                  val sj = st.s(j)
-                  val f = st.l + st.b + sj
-                  val dev = p.value - f
-                  val l1 = alpha * (p.value - sj) + (1 - alpha) * (st.l + st.b)
-                  val b1 = beta * (l1 - st.l) + (1 - beta) * st.b
-                  st = HwState(
-                    l1, b1, st.s.updated(j, gamma * (p.value - l1) + (1 - gamma) * sj), i, p.tsMs)
-                  Iterator.single(StreamScore(p.seriesKey, p.tsMs, p.value, f, dev))
-                }
-              }
-            }.toVector
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsMs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.iterator
-          }
-      }
+    eventTimeLoop[TsSample, HwState, StreamScore](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs)(
+      seeded(HwState(0.0, 0.0, Vector.fill(period)(0.0), 0L, Long.MinValue)) { (st, p) =>
+        val i = st.i + 1
+        val j = ((i - 1) % period).toInt
+        if (i == 1L) {
+          // seed: l = v, b = 0, slots stay 0 (the kernel's touched
+          // slot computes to exactly 0.0)
+          (HwState(p.value, 0.0, st.s, i, p.tsMs), StreamScore(p.seriesKey, p.tsMs, p.value, p.value, 0.0))
+        } else {
+          val sj = st.s(j)
+          val f = st.l + st.b + sj
+          val dev = p.value - f
+          val l1 = alpha * (p.value - sj) + (1 - alpha) * (st.l + st.b)
+          val b1 = beta * (l1 - st.l) + (1 - beta) * st.b
+          (HwState(l1, b1, st.s.updated(j, gamma * (p.value - l1) + (1 - gamma) * sj), i, p.tsMs),
+            StreamScore(p.seriesKey, p.tsMs, p.value, f, dev))
+        }
+      })
   }
 
   /** Streaming Western Electric control-chart rules — the streaming twin
@@ -408,60 +346,53 @@ object MonitorStream {
       points: Dataset[TsSample],
       stats: DataFrame, // (seriesKey, n, s, d)
       watermarkDelay: String = "10 minutes",
-      stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[CtrlFlags] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .join(broadcast(stats.select(col("seriesKey"), col("n"), col("s"), col("d"))), Seq("seriesKey"))
-      .select(col("seriesKey"), col("tsMs"), col("value"), col("n"), col("s"), col("d"), col("eventTime"))
-      .as[CtrlTimedSample]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[CtrlState, CtrlFlags](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[CtrlTimedSample], state: GroupState[CtrlState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.value))
-            var st = state.getOption.getOrElse(CtrlState(Vector.empty, Long.MinValue))
-            val out = batch.iterator.flatMap { p =>
-              if (p.tsMs <= st.lastTsMs) Iterator.empty
-              else {
-                // vm = round-half-away(100·v) — the exact arithmetic Spark's
-                // round(x, 0) applies on the batch side
-                val x = p.value * 100
-                val vmL = if (x < 0) -math.round(-x) else math.round(x)
-                val dm = vmL * p.n - p.s
-                val dm2 = dm * dm
-                val sgn = java.lang.Long.signum(dm)
-                val b3 = dm2 > 9L * p.d
-                val b2 = dm2 > 4L * p.d
-                val b1 = dm2 > p.d
-                val code = ((sgn + 1) << 2) | ((if (b2) 1 else 0) << 1) | (if (b1) 1 else 0)
-                val win = st.hist :+ code
-                def sideCount(last: Int, bit: Int, side: Int) =
-                  win.takeRight(last).count { c =>
-                    ((c >> 2) - 1) == side && (bit == -1 || ((c >> bit) & 1) == 1)
-                  }
-                val r2 = sideCount(3, 1, 1) >= 2 || sideCount(3, 1, -1) >= 2
-                val r3 = sideCount(5, 0, 1) >= 4 || sideCount(5, 0, -1) >= 4
-                val r4 = sideCount(8, -1, 1) == 8 || sideCount(8, -1, -1) == 8
-                st = CtrlState(win.takeRight(7), p.tsMs)
-                Iterator.single(CtrlFlags(p.seriesKey, p.tsMs, p.value, b3, r2, r3, r4))
-              }
-            }.toVector
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsMs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.iterator
+      stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[CtrlFlags] =
+    eventTimeLoop[CtrlPoint, CtrlState, CtrlFlags](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs,
+      enrich = _.join(broadcast(stats.select(col("seriesKey"), col("n"), col("s"), col("d"))), Seq("seriesKey")))(
+      seeded(CtrlState(Vector.empty, Long.MinValue)) { (st, p) =>
+        // vm = round-half-away(100·v) — the exact arithmetic Spark's
+        // round(x, 0) applies on the batch side
+        val x = p.value * 100
+        val vmL = if (x < 0) -math.round(-x) else math.round(x)
+        val dm = vmL * p.n - p.s
+        val dm2 = dm * dm
+        val sgn = java.lang.Long.signum(dm)
+        val b3 = dm2 > 9L * p.d
+        val b2 = dm2 > 4L * p.d
+        val b1 = dm2 > p.d
+        val code = ((sgn + 1) << 2) | ((if (b2) 1 else 0) << 1) | (if (b1) 1 else 0)
+        val win = st.hist :+ code
+        def sideCount(last: Int, bit: Int, side: Int) =
+          win.takeRight(last).count { c =>
+            ((c >> 2) - 1) == side && (bit == -1 || ((c >> bit) & 1) == 1)
           }
-      }
-  }
+        val r2 = sideCount(3, 1, 1) >= 2 || sideCount(3, 1, -1) >= 2
+        val r3 = sideCount(5, 0, 1) >= 4 || sideCount(5, 0, -1) >= 4
+        val r4 = sideCount(8, -1, 1) == 8 || sideCount(8, -1, -1) == 8
+        (CtrlState(win.takeRight(7), p.tsMs), CtrlFlags(p.seriesKey, p.tsMs, p.value, b3, r2, r3, r4))
+      })
 
+  /** Config-driven streaming monitor: accepts the batch `DetectorConfig`
+    * and enforces the streaming contract (SURVEY §7.5, D11) instead of
+    * silently diverging from batch:
+    *
+    *  - THRESHOLD: the percent-of-max form needs the WHOLE series — on
+    *    an unbounded stream only the absolute `score_threshold` is
+    *    computable. Mirroring batch precedence (`Detectors.withThreshold`:
+    *    absolute wins when both are set), an absolute threshold is
+    *    accepted whatever else the config carries; a config that would
+    *    RESOLVE to pct-of-max (explicitly, or implicitly by leaving both
+    *    unset — the batch default) is rejected loudly.
+    *  - ALGORITHM: dispatched like batch `Detectors.score` for the two
+    *    kernels with streaming twins (exp_avg, derivative); anything
+    *    else is rejected rather than scored with the wrong kernel.
+    *  - SCORES are the RAW kernel deviations (emaScores/derivativeScores
+    *    docs): the batch stddev normalization needs the whole series, so
+    *    the threshold here applies to |v−ema| (resp. |d−ema(d)|), NOT
+    *    the batch normalized score — the documented batch/stream
+    *    divergence; pick the threshold for the raw-dev scale.
+    */
   def monitorStreamCfg(
       points: Dataset[TsSample],
       cfg: graft.config.DetectorConfig,
@@ -597,7 +528,12 @@ object MonitorStream {
       profile.select(col("seriesKey"), col("level_fp"), col("n0")).distinct())
     val phaseSide = broadcast(
       profile.select(col("seriesKey"), col("phase").cast("long").as("phase"), col("seasonal_fp")))
-    val ords = statefulOrdinals(points, watermarkDelay, stateTtlMs).toDF()
+    // the per-key arrival ordinal, O(1) state per key
+    val ords = eventTimeLoop[TsSample, OrdState, OrdSample](
+      points, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.value, _.lastTsMs)(
+      seeded(OrdState(0L, Long.MinValue)) { (st, p) =>
+        (OrdState(st.n + 1, p.tsMs), OrdSample(p.seriesKey, p.tsMs, p.value, st.n))
+      }).toDF()
     if (!emitUnscored) {
       ords
         .join(keySide, "seriesKey")
@@ -640,47 +576,6 @@ object MonitorStream {
     }
   }
 
-  /** Per-key arrival ordinals with the monitor family's watermark, TTL
-    * and late/dup hygiene — the stateful half of
-    * [[seasonalResidualStream]], kept O(1) per key.
-    */
-  private def statefulOrdinals(
-      points: Dataset[TsSample],
-      watermarkDelay: String,
-      stateTtlMs: Long): Dataset[OrdSample] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[TimedSample]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[OrdState, OrdSample](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (_: String, rows: Iterator[TimedSample], state: GroupState[OrdState]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.value))
-            var st = state.getOption.getOrElse(OrdState(0L, Long.MinValue))
-            val out = batch.iterator.flatMap { p =>
-              if (p.tsMs <= st.lastTsMs) Iterator.empty // late/dup guard
-              else {
-                val o = OrdSample(p.seriesKey, p.tsMs, p.value, st.n)
-                st = OrdState(st.n + 1, p.tsMs)
-                Iterator.single(o)
-              }
-            }.toVector
-            state.update(st)
-            state.setTimeoutTimestamp(
-              math.max(st.lastTsMs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.iterator
-          }
-      }
-  }
-
   /** D12 in streaming form: run-length sessionization of above-threshold
     * scores into anomaly windows. Per-key state carries the OPEN window
     * (start, end, peak, argmax — O(1)); a window is emitted when a
@@ -694,54 +589,19 @@ object MonitorStream {
       scoreThreshold: Double,
       watermarkDelay: String = "10 minutes",
       stateTtlMs: Long = Constants.DefaultStreamStateTtlMs): Dataset[Anomaly] = {
-    val spark = scores.sparkSession
-    import spark.implicits._
-    scores.toDF()
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
-      .withWatermark("eventTime", watermarkDelay)
-      .as[TimedScore]
-      .groupByKey(_.seriesKey)
-      .flatMapGroupsWithState[OpenWindow, Anomaly](
-        OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[TimedScore], state: GroupState[OpenWindow]) =>
-          if (state.hasTimedOut) {
-            // dead series: flush the open window instead of losing it
-            val tail = state.getOption.map(w =>
-              Anomaly(key, w.startTsMs, w.endTsMs, w.peak, w.exactTsMs))
-            state.remove()
-            tail.iterator
-          } else {
-            val batch = rows.toArray.sortBy(p => (p.tsMs, p.dev))
-            var open = state.getOption
-            var lastTs = open.map(_.endTsMs).getOrElse(Long.MinValue)
-            val out = Vector.newBuilder[Anomaly]
-            batch.foreach { p =>
-              if (p.tsMs > lastTs) {
-                lastTs = p.tsMs
-                if (p.dev > scoreThreshold) {
-                  open = open match {
-                    case Some(w) =>
-                      Some(
-                        if (p.dev > w.peak) OpenWindow(w.startTsMs, p.tsMs, p.dev, p.tsMs)
-                        else OpenWindow(w.startTsMs, p.tsMs, w.peak, w.exactTsMs))
-                    case None => Some(OpenWindow(p.tsMs, p.tsMs, p.dev, p.tsMs))
-                  }
-                } else {
-                  open.foreach(w => out += Anomaly(key, w.startTsMs, w.endTsMs, w.peak, w.exactTsMs))
-                  open = None
-                }
-              }
-            }
-            open match {
-              case Some(w) => state.update(w)
-              case None => if (state.exists) state.remove()
-            }
-            state.setTimeoutTimestamp(
-              math.max(lastTs + stateTtlMs, state.getCurrentWatermarkMs + 1))
-            out.result().iterator
-          }
-      }
+    def closed(key: String, w: OpenWindow) = Anomaly(key, w.startTsMs, w.endTsMs, w.peak, w.exactTsMs)
+    eventTimeLoop[StreamScore, OpenWindow, Anomaly](
+      scores, watermarkDelay, stateTtlMs, _.seriesKey, _.tsMs, _.dev, _.endTsMs,
+      // dead series: flush the open window instead of losing it
+      expire = (key, w) => Some(closed(key, w))) { (open, p) =>
+      if (p.dev > scoreThreshold) {
+        (Some(open match {
+          case Some(w) if p.dev > w.peak => OpenWindow(w.startTsMs, p.tsMs, p.dev, p.tsMs)
+          case Some(w) => OpenWindow(w.startTsMs, p.tsMs, w.peak, w.exactTsMs)
+          case None => OpenWindow(p.tsMs, p.tsMs, p.dev, p.tsMs)
+        }), None)
+      } else (None, open.map(closed(p.seriesKey, _)))
+    }
   }
 
   /** One sessionizable arrival for `sessionReplay`. */

@@ -89,27 +89,34 @@ object Replay {
       q.processAllAvailable()
     }
 
-  /** Replay `points` through `monitorStreamCfg(cfg)` in ascending order
-    * of `chunkKey` (e.g. the event's day), one micro-batch per chunk.
-    * The state TTL defaults to effectively-infinite so the replay is a
-    * pure batch-parity check (a finite TTL re-seeds the EMA after quiet
-    * gaps — correct streaming hygiene, but a batch/stream divergence;
-    * the TTL path is covered by StreamingSpec).
+  /** The chunked-replay driver every TsSample monitor replay shares:
+    * feed `points` through `monitor` in ascending order of `chunkKey`
+    * (e.g. the event's day), one micro-batch per chunk, and return the
+    * sink table.
     */
-  def monitorCfgReplay(
-      points: Dataset[TsSample],
-      cfg: DetectorConfig,
-      chunkKey: TsSample => Long,
-      stateTtlMs: Long = Long.MaxValue / 4): DataFrame = {
+  private def replayChunks(points: Dataset[TsSample], chunkKey: TsSample => Long)(
+      monitor: Dataset[TsSample] => DataFrame): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     implicit val sqlCtx: SQLContext = spark.sqlContext
     // bounded by construction: replay inputs are verification-scale
     val chunks = points.collect().groupBy(chunkKey).toSeq.sortBy(_._1).map(_._2.toSeq)
     val mem = MemoryStream[TsSample]
-    val out = MonitorStream.monitorStreamCfg(mem.toDS(), cfg, stateTtlMs)
-    runSink(spark, out)(q => feedChunks(q, mem, chunks))
+    runSink(spark, monitor(mem.toDS()))(q => feedChunks(q, mem, chunks))
   }
+
+  /** Replay `points` through `monitorStreamCfg(cfg)`, one micro-batch
+    * per `chunkKey`. The state TTL defaults to effectively-infinite so
+    * the replay is a pure batch-parity check (a finite TTL re-seeds the
+    * EMA after quiet gaps — correct streaming hygiene, but a
+    * batch/stream divergence; the TTL path is covered by StreamingSpec).
+    */
+  def monitorCfgReplay(
+      points: Dataset[TsSample],
+      cfg: DetectorConfig,
+      chunkKey: TsSample => Long,
+      stateTtlMs: Long = Long.MaxValue / 4): DataFrame =
+    replayChunks(points, chunkKey)(MonitorStream.monitorStreamCfg(_, cfg, stateTtlMs))
 
   /** Replay LIVE `points` through the streaming seasonal-residual
     * monitor against a stored STL `profile`, one micro-batch per
@@ -124,24 +131,10 @@ object Replay {
       threshold: Double,
       chunkKey: TsSample => Long,
       stateTtlMs: Long = Long.MaxValue / 4,
-      emitUnscored: Boolean = false): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    implicit val sqlCtx: SQLContext = spark.sqlContext
-    val chunks = points.collect().groupBy(chunkKey).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val mem = MemoryStream[TsSample]
-    val out = MonitorStream.seasonalResidualStream(
-      mem.toDS(), profile, period, threshold, stateTtlMs = stateTtlMs,
-      emitUnscored = emitUnscored)
-    runSink(spark, out)(q => feedChunks(q, mem, chunks))
-  }
+      emitUnscored: Boolean = false): DataFrame =
+    replayChunks(points, chunkKey)(MonitorStream.seasonalResidualStream(
+      _, profile, period, threshold, stateTtlMs = stateTtlMs, emitUnscored = emitUnscored))
 
-  /** Replay `points` through the streaming CUSUM in `chunkKey` order,
-    * calibrated by the batch mean/stddev over the SAME points (the
-    * batch-parity configuration: with full-history calibration the
-    * stream must reproduce `Detectors.cusumScores` exactly on dup-free
-    * series). Infinite-TTL default, as in [[monitorCfgReplay]].
-    */
   /** Replay `points` through the streaming Holt-Winters in `chunkKey`
     * order, then apply the batch normalization (|dev|/stddev_pop over ALL
     * input values, signed fallback when flat — `normalizeEmaDevs`'s exact
@@ -153,15 +146,9 @@ object Replay {
       points: Dataset[TsSample],
       chunkKey: TsSample => Long,
       stateTtlMs: Long = Long.MaxValue / 4): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.functions.{abs, col, stddev_pop, when}
-    implicit val sqlCtx: SQLContext = spark.sqlContext
     val stats = points.groupBy("seriesKey").agg(stddev_pop(col("value")).as("_sd"))
-    val chunks = points.collect().groupBy(chunkKey).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val mem = MemoryStream[TsSample]
-    val out = MonitorStream.hwStream(mem.toDS(), stateTtlMs = stateTtlMs)
-    runSink(spark, out.toDF())(q => feedChunks(q, mem, chunks))
+    replayChunks(points, chunkKey)(MonitorStream.hwStream(_, stateTtlMs = stateTtlMs).toDF())
       .join(stats, Seq("seriesKey"))
       .withColumn("score", when(col("_sd") > 0, abs(col("dev") / col("_sd"))).otherwise(col("dev")))
       .select("seriesKey", "tsMs", "value", "score")
@@ -177,10 +164,7 @@ object Replay {
       points: Dataset[TsSample],
       chunkKey: TsSample => Long,
       stateTtlMs: Long = Long.MaxValue / 4): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.functions.{col, count, lit, round, sum}
-    implicit val sqlCtx: SQLContext = spark.sqlContext
     val vm = round(col("value") * 100, 0).cast("long")
     val stats = points.toDF()
       .select(col("seriesKey"), vm.as("_vm"))
@@ -188,27 +172,24 @@ object Replay {
       .agg(count(lit(1)).as("n"), sum(col("_vm")).as("s"), sum(col("_vm") * col("_vm")).as("_q"))
       .withColumn("d", col("n") * col("_q") - col("s") * col("s"))
       .select("seriesKey", "n", "s", "d")
-    val chunks = points.collect().groupBy(chunkKey).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val mem = MemoryStream[TsSample]
-    val out = MonitorStream.controlRulesStream(mem.toDS(), stats, stateTtlMs = stateTtlMs)
-    runSink(spark, out.toDF())(q => feedChunks(q, mem, chunks))
+    replayChunks(points, chunkKey)(MonitorStream.controlRulesStream(_, stats, stateTtlMs = stateTtlMs).toDF())
   }
 
+  /** Replay `points` through the streaming CUSUM in `chunkKey` order,
+    * calibrated by the batch mean/stddev over the SAME points (the
+    * batch-parity configuration: with full-history calibration the
+    * stream must reproduce `Detectors.cusumScores` exactly on dup-free
+    * series). Infinite-TTL default, as in [[monitorCfgReplay]].
+    */
   def cusumReplay(
       points: Dataset[TsSample],
       chunkKey: TsSample => Long,
       slack: Double = graft.config.Constants.CusumSlack,
       stateTtlMs: Long = Long.MaxValue / 4): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.functions.{avg, col, stddev_pop}
-    implicit val sqlCtx: SQLContext = spark.sqlContext
     val stats = points
       .groupBy("seriesKey")
       .agg(avg(col("value")).as("mu"), stddev_pop(col("value")).as("sd"))
-    val chunks = points.collect().groupBy(chunkKey).toSeq.sortBy(_._1).map(_._2.toSeq)
-    val mem = MemoryStream[TsSample]
-    val out = MonitorStream.cusumStream(mem.toDS(), stats, slack, stateTtlMs = stateTtlMs)
-    runSink(spark, out.toDF())(q => feedChunks(q, mem, chunks))
+    replayChunks(points, chunkKey)(MonitorStream.cusumStream(_, stats, slack, stateTtlMs = stateTtlMs).toDF())
   }
 }

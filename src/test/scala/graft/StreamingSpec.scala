@@ -402,6 +402,85 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("state stays bounded in key count: quiet series leave the state store once the watermark passes their TTL") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[TsSample]
+    val q = MonitorStream
+      .emaScores(mem.toDS(), watermarkDelay = "0 seconds", stateTtlMs = 5000L)
+      .writeStream.outputMode("append").format("memory").queryName("bounded_state").start()
+    def stateRows() = q.lastProgress.stateOperators(0).numRowsTotal
+    try {
+      // 50 series report once and go quiet; one series stays live
+      mem.addData((1 to 50).map(i => TsSample(s"quiet$i", 1000, i.toDouble)) :+ TsSample("live", 1000, 0.0): _*)
+      q.processAllAvailable()
+      assert(stateRows() == 51, "every series holds state while inside its TTL")
+      // the live series alone moves the watermark past the quiet series' TTL
+      (1 to 3).foreach { i => mem.addData(TsSample("live", 1000 + i * 10000L, 1.0)); q.processAllAvailable() }
+      assert(stateRows() == 1, s"state must fall back to the live key count: ${stateRows()} rows")
+    } finally q.stop()
+  }
+
+  test("anomalyWindows flushes a dead series' open window when the event-time TTL fires") {
+    import graft.streaming.StreamScore
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[StreamScore]
+    val q = MonitorStream
+      .anomalyWindows(mem.toDS(), scoreThreshold = 5.0, watermarkDelay = "0 seconds", stateTtlMs = 5000L)
+      .writeStream.outputMode("append").format("memory").queryName("win_ttl").start()
+    try {
+      // key 1 opens a hot window and goes quiet: nothing closes it
+      mem.addData(StreamScore("1", 1000, 0, 0, 9.0), StreamScore("1", 2000, 0, 0, 7.0))
+      q.processAllAvailable()
+      assert(spark.table("win_ttl").count() == 0, "an open window stays pending while its key is live")
+      // key 2's cold events advance the watermark past key 1's TTL
+      mem.addData(StreamScore("2", 100000, 0, 0, 1.0)); q.processAllAvailable()
+      mem.addData(StreamScore("2", 110000, 0, 0, 1.0)); q.processAllAvailable()
+      val got = spark.table("win_ttl").as[graft.model.Anomaly].collect().toSeq
+      assert(got == Seq(graft.model.Anomaly("1", 1000, 2000, 9.0, 1000)), s"the open window must flush, got $got")
+    } finally q.stop()
+  }
+
+  test("late/duplicate guard: a point at or before the key's last accepted ts emits nothing and leaves later scores unchanged, on every event-time monitor") {
+    import graft.streaming.StreamScore
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    implicit val sqlCtx = spark.sqlContext
+    val hist = (0L until 16L).map(i => TsSample("1", (i + 1) * 1000, 10.0 * (1 + (i % 4))))
+    val profile = MonitorStream.seasonalProfileFrom(
+      graft.ts.TsAlgebra.stlDecompose(hist.toDS().toDF(), "seriesKey", "tsMs", "value", period = 4),
+      "seriesKey", "tsMs")
+    val cusumStats = Seq(("1", 0.0, 1.0)).toDF("seriesKey", "mu", "sd")
+    val ctrlStats = Seq(("1", 100L, 0L, 1000000L)).toDF("seriesKey", "n", "s", "d")
+    val monitors: Seq[(String, Dataset[TsSample] => DataFrame)] = Seq(
+      "ema" -> (MonitorStream.emaScores(_).toDF()),
+      "derivative" -> (MonitorStream.derivativeScores(_).toDF()),
+      "cusum" -> (MonitorStream.cusumStream(_, cusumStats).toDF()),
+      "holt-winters" -> (MonitorStream.hwStream(_).toDF()),
+      "control rules" -> (MonitorStream.controlRulesStream(_, ctrlStats).toDF()),
+      "seasonal ordinals" -> (MonitorStream.seasonalResidualStream(_, profile, period = 4, threshold = 5.0)),
+      // dev = value: 9 and 8 open a window that only a cold point closes
+      "anomaly windows" -> (ds => MonitorStream.anomalyWindows(
+        ds.map(p => StreamScore(p.seriesKey, p.tsMs, p.value, 0.0, p.value)), scoreThreshold = 5.0).toDF()))
+    val first = Seq(TsSample("1", 1000, 9.0), TsSample("1", 2000, 8.0))
+    // an earlier ts and a duplicated ts, both inside the 10-minute watermark
+    val late = Seq(TsSample("1", 1500, 1.0), TsSample("1", 2000, 1.0))
+    val next = Seq(TsSample("1", 3000, 1.0))
+    // rows in the sink after each batch, and the final sink
+    def run(monitor: Dataset[TsSample] => DataFrame, batches: Seq[Seq[TsSample]], name: String) = {
+      val mem = MemoryStream[TsSample]
+      val q = monitor(mem.toDS()).writeStream.outputMode("append").format("memory").queryName(name).start()
+      try {
+        val counts = batches.map { b => mem.addData(b: _*); q.processAllAvailable(); spark.table(name).count() }
+        (counts, spark.table(name).collect().map(_.toString).sorted.toSeq)
+      } finally q.stop()
+    }
+    monitors.zipWithIndex.foreach { case ((label, monitor), i) =>
+      val (counts, withLate) = run(monitor, Seq(first, late, next), s"guard_late_$i")
+      val (_, clean) = run(monitor, Seq(first, next), s"guard_clean_$i")
+      assert(counts(1) == counts(0), s"$label: the late batch emitted ${counts(1) - counts(0)} rows")
+      assert(clean.nonEmpty && withLate == clean, s"$label: $withLate vs a run without the late batch $clean")
+    }
+  }
+
   test("streaming window assembly matches batch sessionization; open windows stay pending") {
     import graft.streaming.StreamScore
     implicit val sqlCtx = spark.sqlContext
