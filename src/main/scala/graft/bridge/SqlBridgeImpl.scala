@@ -48,7 +48,9 @@ object SqlBridgeImpl {
     * cached relation, the result is planned with its real row count
     * rather than the input's estimate, so small results still broadcast;
     * [[persistedRowCount]] reads that count, and [[releaseRows]] frees the
-    * storage early where a loop supersedes its own copies.
+    * storage early where a loop supersedes its own copies. If the run
+    * throws, the RDD is unpersisted before the exception propagates, so a
+    * failed materialization leaves nothing stored.
     */
   def persistRows(ds: Dataset[_]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeSet
@@ -59,7 +61,8 @@ object SqlBridgeImpl {
     val qe = cds.queryExecution
     val (rows, n) = SQLExecution.withNewExecutionId(qe, Some("persistRows")) {
       val r = qe.toRdd.map(_.copy()).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (r, r.count())
+      try (r, r.count())
+      catch { case t: Throwable => r.unpersist(blocking = false); throw t }
     }
     // output attributes as Dataset.localCheckpoint derives them, but the
     // partitioning of the plan that produced the rows: under AQE that is

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.bridge.SqlBridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -125,98 +126,71 @@ object Graph {
     * Input edges may carry duplicates, reversals, and self-loops — the
     * canonical distinct (least, greatest) pass absorbs all three.
     *
-    * The result is computed before this returns and comes back persisted
-    * (one metadata-sized cache entry, a row per node): the caller
-    * releases it with `.unpersist()`. The intermediates are released
-    * before returning; if the computation throws, the result is too.
+    * The result is computed before this returns: it is a
+    * `SqlBridge.persistRows` copy (a row per node), which ContextCleaner
+    * releases once the frame is unreachable, so the caller has nothing to
+    * release. If the computation throws, nothing stays stored.
     */
   def triangles(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    // Multi-consumer persists (the `exciseDuplicateChunks` cache
-    // contract, but SCOPED — see the release below). Without them the
-    // INPUT subtree is inlined once per consumer — `e` feeds deg
-    // (twice, via the union) + the two rank joins, `deg` has three
-    // consumers, `oriented` three — so an edge list derived from a
+    // Two intermediates are stored (`persistRows`). The canonical edge
+    // list feeds the degree count (twice, via the union) and the rank
+    // joins: inlined into each consumer, an edge list derived from a
     // non-trivial query (the co-purchase pair join here) re-planned and
-    // re-scanned its source ~17x: the measured pre-fix plan was 948
-    // nodes / 410 Exchanges / 136 parquet scans of `events` for ONE
-    // triangle count (plans/r15/graph_triangles_before.txt). All three
-    // cached frames are metadata-sized (edges and degrees, never
-    // payloads).
-    val e = edges
+    // re-scanned its source ~17x (948 plan nodes, 136 parquet scans of
+    // `events` for ONE triangle count, plans/r15/graph_triangles_before.txt).
+    // The oriented edges feed both wedge sides and the closing join; they
+    // are stored hash-partitioned on `src` into the session's shuffle
+    // partition count. The wedge joins then stream them in that many
+    // tasks (a broadcast build side, or, when too big to broadcast, a
+    // self-join on `src` with no exchange). Left to AQE, their edge-sized
+    // input is coalesced into a few partitions although the wedge-sized
+    // output is orders larger. Measured on `graph_triangles` at sf0.1 on
+    // 4 cores, cold: 10.8 s / 30 jobs with the three intermediates cached
+    // lazily, 13.4 s / 32 jobs with only `e` stored, 6.8 s / 21 jobs with
+    // `e` and `oriented` stored.
+    val e = SqlBridge.persistRows(edges
       .select(least(col(aCol), col(bCol)).as("a"), greatest(col(aCol), col(bCol)).as("b"))
       .where(col("a") =!= col("b") && col("a").isNotNull && col("b").isNotNull)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val deg = e.select(col("a").as("node"))
       .union(e.select(col("b").as("node")))
       .groupBy(col("node"))
       .agg(count(lit(1)).as("deg"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // All three persists fill LAZILY inside the ONE materializing job at
-    // the end — the r15 form ran eager count() barriers on e and
-    // oriented first ("parallel first-consumers race the fill"), but
-    // each barrier re-runs its full stage chain as a separate job and
-    // the two extra jobs measured 2.5 s of the row's 4.6 s; a racing
-    // fill only duplicates work (persist blocks are deterministic,
-    // first writer wins) and measured CHEAPER than the barriers
-    // (4.6 s → 2.5 s on graph_triangles, 5.1 → 2.0 on
-    // ext_sql_triangles, bench medians).
-    try {
-      // (deg, node) rank is a total order: equal-degree endpoints of one
-      // edge still differ on node. src = lower rank, dst = higher.
-      val ranked = e
-        .join(deg.select(col("node").as("a"), col("deg").as("da_")), "a")
-        .join(deg.select(col("node").as("b"), col("deg").as("db_")), "b")
-      val rA = struct(col("da_").as("d"), col("a").as("n"))
-      val rB = struct(col("db_").as("d"), col("b").as("n"))
-      val aLower = rA < rB
-      val oriented = ranked.select(
+    // (deg, node) rank is a total order: equal-degree endpoints of one
+    // edge still differ on node. src = lower rank, dst = higher.
+    val ranked = e
+      .join(deg.select(col("node").as("a"), col("deg").as("da_")), "a")
+      .join(deg.select(col("node").as("b"), col("deg").as("db_")), "b")
+    val rA = struct(col("da_").as("d"), col("a").as("n"))
+    val rB = struct(col("db_").as("d"), col("b").as("n"))
+    val aLower = rA < rB
+    val oriented = SqlBridge.persistRows(ranked
+      .select(
         when(aLower, col("a")).otherwise(col("b")).as("src"),
         when(aLower, rA).otherwise(rB).as("srcR"),
         when(aLower, col("b")).otherwise(col("a")).as("dst"),
         when(aLower, rB).otherwise(rA).as("dstR"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // wedges at u: unordered out-neighbor pairs, canonicalized by
-        // rank so the closing edge (if present) is oriented exactly v→w
-        val w1 = oriented.select(col("src").as("u"), col("dst").as("v"), col("dstR").as("vR"))
-        val w2 = oriented.select(col("src").as("u"), col("dst").as("w"), col("dstR").as("wR"))
-        val wedges = w1.join(w2, Seq("u")).where(col("vR") < col("wR"))
-        val tris = wedges.join(
-          oriented.select(col("src").as("v"), col("dst").as("w")),
-          Seq("v", "w"))
-        val triPerNode = tris
-          .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
-          .groupBy(col("node"))
-          .agg(count(lit(1)).as("n_tri"))
-        val out = deg
-          .join(triPerNode, Seq("node"), "left")
-          .select(
-            col("node"),
-            col("deg"),
-            coalesce(col("n_tri"), lit(0L)).as("n_tri"),
-            expr("CASE WHEN deg >= 2 THEN (2 * coalesce(n_tri, 0) * 1000000) DIV (deg * (deg - 1)) ELSE 0 END")
-              .as("cc_micro"))
-          .withColumn("cc", col("cc_micro") / 1000000.0)
-        // Materialize the (one-row-per-node) result so all three
-        // INTERMEDIATES can be RELEASED before returning: the r15 lazy
-        // form left e/deg/oriented persisted for the session (repeated
-        // calls with different inputs accumulate block-manager entries
-        // until LRU eviction). The result is cached through the normal
-        // AQE path — `localCheckpoint(eager = true)` was measured 4.96 s
-        // against 0.20 s for the identical warm tail (plans/r16 probe):
-        // its materialization runs through `Dataset.rdd`, outside the
-        // adaptive re-planning that broadcasts/coalesces the wedge
-        // joins. The returned frame keeps its cache entry (see the
-        // scaladoc); a failed fill releases it too.
-        val res = out.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try res.count()
-        catch { case t: Throwable => res.unpersist(blocking = false); throw t }
-        res
-      } finally oriented.unpersist(blocking = false)
-    } finally {
-      e.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-    }
+      .repartition(edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt, col("src")))
+    // wedges at u: unordered out-neighbor pairs, canonicalized by
+    // rank so the closing edge (if present) is oriented exactly v→w
+    val w1 = oriented.select(col("src").as("u"), col("dst").as("v"), col("dstR").as("vR"))
+    val w2 = oriented.select(col("src").as("u"), col("dst").as("w"), col("dstR").as("wR"))
+    val wedges = w1.join(w2, Seq("u")).where(col("vR") < col("wR"))
+    val tris = wedges.join(
+      oriented.select(col("src").as("v"), col("dst").as("w")),
+      Seq("v", "w"))
+    val triPerNode = tris
+      .select(explode(array(col("u"), col("v"), col("w"))).as("node"))
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("n_tri"))
+    SqlBridge.persistRows(deg
+      .join(triPerNode, Seq("node"), "left")
+      .select(
+        col("node"),
+        col("deg"),
+        coalesce(col("n_tri"), lit(0L)).as("n_tri"),
+        expr("CASE WHEN deg >= 2 THEN (2 * coalesce(n_tri, 0) * 1000000) DIV (deg * (deg - 1)) ELSE 0 END")
+          .as("cc_micro"))
+      .withColumn("cc", col("cc_micro") / 1000000.0))
   }
 }

@@ -3,7 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.bridge.SqlBridge.{persistRows, persistedRowCount}
+import graft.bridge.SqlBridge.{persistRows, persistedRowCount, releaseRows}
 import graft.functions.GraftFunctions.cosine_sim
 
 /** Approximate-nearest-neighbor / similarity search over an embedding
@@ -316,8 +316,12 @@ object Similarity {
   /** A prebuilt IVF index: the coarse centroids (tiny, broadcastable) and
     * the cell-assigned corpus. At 100 TB `assigned` is written to storage
     * partitioned/bucketed by `cell` once, offline; queries only probe it.
-    * The assignment plan is lazy — re-evaluating it applies the ALREADY
-    * TRAINED quantizer (a broadcast-centroid argmin pass), never a refit.
+    * In memory (`buildIvfIndex`, `ivfAppend`) `assigned` is a
+    * `SqlBridge.persistRows` copy: it lives outside the CacheManager, so
+    * `clearCache()` leaves it in place, and ContextCleaner releases it once
+    * the index is unreachable — nothing to unpersist. A released block is
+    * recomputed from the ALREADY TRAINED quantizer (a broadcast-centroid
+    * argmin pass), never a refit.
     */
   final case class IvfIndex(centroids: DataFrame, assigned: DataFrame)
 
@@ -374,7 +378,8 @@ object Similarity {
     import spark.implicits._
     ivfFitCounter.incrementAndGet()
     val nBits = math.max(1, 64 - java.lang.Long.numberOfLeadingZeros(nlist - 1L).toInt)
-    val unitDs = prepared(df, idCol, embCol)
+    // materialized once: the seeds and every Lloyd pass read it
+    val unitDs = persistRows(prepared(df, idCol, embCol)
       .select(col("id"), col("vec"), col("nrm"))
       .as[(Long, Array[Double], Double)]
       .mapPartitions { it =>
@@ -396,9 +401,7 @@ object Similarity {
           (id, v, nr, u, q, bucket)
         }
       }
-      .toDF("id", "vec", "nrm", "unit", "q", "bucket")
-    unitDs.persist()
-    unitDs.count() // materialize once: seeds + iters passes consume it
+      .toDF("id", "vec", "nrm", "unit", "q", "bucket"))
     // seeds: one per occupied LCG-hyperplane bucket (regions of the sphere
     // → spread-out initial centroids, the deterministic stand-in for
     // kmeans++ spreading), the doc with the smallest (md5(id), id) in it
@@ -441,17 +444,15 @@ object Similarity {
     }
     val centroidsDf = centroids.toIndexedSeq.toDF("cid", "cvec")
     val bc = spark.sparkContext.broadcast(centroids)
-    val assigned = unitDs
-      .select(col("id"), col("vec"), col("nrm"), col("unit"))
-      .as[(Long, Array[Double], Double, Array[Double])]
-      .map { case (id, v, nr, u) => (id, v, nr, nearestCell(bc.value, u)) }
-      .toDF("id", "vec", "nrm", "cell")
     // materialize the assignment as part of the (offline) build: a probe
     // consumes `assigned` twice (query side + corpus side) and must never
     // recompute the quantizer pass per evaluation
-    assigned.persist()
-    assigned.count()
-    unitDs.unpersist(blocking = false)
+    val assigned = persistRows(unitDs
+      .select(col("id"), col("vec"), col("nrm"), col("unit"))
+      .as[(Long, Array[Double], Double, Array[Double])]
+      .map { case (id, v, nr, u) => (id, v, nr, nearestCell(bc.value, u)) }
+      .toDF("id", "vec", "nrm", "cell"))
+    releaseRows(unitDs)
     IvfIndex(centroidsDf, assigned)
   }
 
@@ -594,7 +595,9 @@ object Similarity {
     * are touched just for the exact re-rank of the top candidates.
     *
     * `codebooks` is tiny (m × ksub × dims/m doubles — broadcastable);
-    * `coded` is the cell-assigned corpus carrying `codes: array<int>`.
+    * `coded` is the cell-assigned corpus carrying `codes: array<int>`. In
+    * memory (`buildPqOn`, `pqAppend`) it is a `SqlBridge.persistRows`
+    * copy, released like `IvfIndex.assigned` once unreachable.
     */
   final case class PqIndex(
       ivf: IvfIndex,
@@ -674,16 +677,16 @@ object Similarity {
       pqIters: Int = 2): PqIndex = {
     val spark = ivf.assigned.sparkSession
     import spark.implicits._
-    val base = ivf.assigned
+    // materialized once: seeds, every Lloyd pass and the encode read it
+    val base = persistRows(ivf.assigned
       .select(col("id"), col("vec"), col("nrm"), col("cell"))
       .as[(Long, Array[Double], Double, Int)]
       .map { case (id, v, nr, cell) =>
         val (u, q) = unitAndQ(v, nr)
         (id, v, nr, cell, u, q)
       }
-      .toDF("id", "vec", "nrm", "cell", "unit", "q")
-    base.persist()
-    val n = base.count() // materialize once: seeds + pqIters passes + encode
+      .toDF("id", "vec", "nrm", "cell", "unit", "q"))
+    val n = persistedRowCount(base)
     require(n >= ksub, s"PQ needs at least ksub=$ksub vectors, got $n")
     val dims = base.select(size(col("unit"))).head.getInt(0)
     require(dims % m == 0, s"dims=$dims must divide into m=$m subspaces")
@@ -724,16 +727,14 @@ object Similarity {
       books = next // (m, cid) pairs with no members kept their codeword
     }
     val bc = spark.sparkContext.broadcast(books)
-    val coded = base
+    val coded = persistRows(base
       .select(col("id"), col("vec"), col("nrm"), col("cell"), col("unit"))
       .as[(Long, Array[Double], Double, Int, Array[Double])]
       .map { case (id, v, nr, cell, u) =>
         (id, v, nr, cell, Array.tabulate(m)(mm => nearestSub(bc.value(mm), u, mm * subDim, subDim)))
       }
-      .toDF("id", "vec", "nrm", "cell", "codes")
-    coded.persist()
-    coded.count()
-    base.unpersist(blocking = false)
+      .toDF("id", "vec", "nrm", "cell", "codes"))
+    releaseRows(base)
     PqIndex(ivf, books, coded, m, ksub)
   }
 
@@ -764,17 +765,13 @@ object Similarity {
         (id, v, nr, cell, codes)
       }
       .toDF("id", "vec", "nrm", "cell", "codes")
-    val mergedAssigned = index.ivf.assigned
-      .unionByName(deltaCoded.select("id", "vec", "nrm", "cell"))
-    mergedAssigned.persist()
-    mergedAssigned.count()
+    val mergedAssigned = persistRows(index.ivf.assigned
+      .unionByName(deltaCoded.select("id", "vec", "nrm", "cell")))
     // the coded side mirrors the storage layout: unsplit builds carry the
     // vectors on `coded`, split storage keeps codes-only columns
-    val mergedCoded =
+    val mergedCoded = persistRows(
       if (index.vectorsSplit.isEmpty) index.coded.unionByName(deltaCoded)
-      else index.coded.unionByName(deltaCoded.select("id", "cell", "codes"))
-    mergedCoded.persist()
-    mergedCoded.count()
+      else index.coded.unionByName(deltaCoded.select("id", "cell", "codes")))
     PqIndex(
       IvfIndex(index.ivf.centroids, mergedAssigned), index.books, mergedCoded,
       mSub, index.ksub,
@@ -888,10 +885,7 @@ object Similarity {
         (id, v, nr, nearestCell(bc.value, u))
       }
       .toDF("id", "vec", "nrm", "cell")
-    val merged = index.assigned.unionByName(assignedDelta)
-    merged.persist()
-    merged.count()
-    IvfIndex(index.centroids, merged)
+    IvfIndex(index.centroids, persistRows(index.assigned.unionByName(assignedDelta)))
   }
 
   /** Persisted-index twin of `ivfAppend`: assign the delta to the frozen
@@ -923,7 +917,7 @@ object Similarity {
       existing, col(idCol).cast("long") === col("__existing_id"), "left_anti")
     val onlyDelta = ivfAppend(IvfIndex(idx.centroids, idx.assigned.limit(0)), fresh, idCol, embCol)
     onlyDelta.assigned.write.partitionBy("cell").mode("append").parquet(s"$path/assigned")
-    onlyDelta.assigned.unpersist(blocking = false)
+    releaseRows(onlyDelta.assigned)
     readIvfIndex(spark, path)
   }
 
@@ -1124,27 +1118,20 @@ object Similarity {
     * surprise. Table-0 rows double as the vector store (exactly one row
     * per id), so verify stages late-materialize vectors without keeping
     * a second corpus copy.
+    *
+    * The in-memory form (`buildLshIndex`) reads the prepared corpus from a
+    * `SqlBridge.persistRows` copy, which ContextCleaner releases once the
+    * index is unreachable: there is nothing to release by hand.
     */
-  final case class LshIndex(
-      bucketed: DataFrame,
-      dims: Int,
-      nBits: Int,
-      nTables: Int,
-      source: Option[DataFrame] = None) {
+  final case class LshIndex(bucketed: DataFrame, dims: Int, nBits: Int, nTables: Int) {
     def vectors: DataFrame =
       bucketed.where(col("table") === 0).select(col("id"), col("vec"), col("nrm"))
-    /** Release the build-time cache of the prepared corpus (held so the
-      * sizing count and the bucketing kernel share one scan). Call when
-      * the index has been written to parquet (or is no longer probed
-      * in-memory) — otherwise a full corpus copy stays pinned in the
-      * block manager for the session lifetime.
-      */
-    def release(): Unit = source.foreach(_.unpersist(blocking = false))
   }
 
   /** Build the in-memory form: one corpus scan through the shared
     * `lshBucketed` kernel, bucket split into (table, key) columns.
-    * `nBits <= 0` sizes from the corpus count via `lshBitsFor`.
+    * `nBits <= 0` sizes from the corpus count via `lshBitsFor`; the
+    * sizing count and the bucketing kernel share one `persistRows` copy.
     */
   def buildLshIndex(
       df: DataFrame,
@@ -1153,14 +1140,13 @@ object Similarity {
       dims: Int,
       nBits: Int = 0,
       nTables: Int = 8): LshIndex = {
-    val prep = prepared(df, idCol, embCol).persist()
-    val n = prep.count()
-    val bits = if (nBits > 0) nBits else lshBitsFor(n)
+    val prep = persistRows(prepared(df, idCol, embCol))
+    val bits = if (nBits > 0) nBits else lshBitsFor(persistedRowCount(prep))
     val b = lshBucketed(prep, dims, bits, nTables)
       .withColumn("table", split(col("bucket"), ":").getItem(0).cast("int"))
       .withColumn("key", split(col("bucket"), ":").getItem(1).cast("long"))
       .select(col("id"), col("vec"), col("nrm"), col("table"), col("key"))
-    LshIndex(b, dims, bits, nTables, source = Some(prep))
+    LshIndex(b, dims, bits, nTables)
   }
 
   /** Persist an LSH index: meta (the frozen hash-family parameters) as
@@ -1182,9 +1168,6 @@ object Similarity {
       .repartition(col("table"), col("key"))
       .sortWithinPartitions(col("key"))
       .write.partitionBy("table").mode("overwrite").parquet(s"$path/bucketed")
-    // the parquet layout is now the index; the build-time corpus cache
-    // would otherwise stay pinned for the session
-    index.release()
   }
 
   /** Reopen a persisted LSH index; the *On probes work on it unchanged. */

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.bridge.SqlBridge
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -832,23 +833,24 @@ object TextAnalysis {
     * construction.
     *
     * Returns the merge table rows and the final vocabulary
-    * (word, cnt, s) with `s` still in doubled-space form.
+    * (word, cnt, s) with `s` still in doubled-space form. Each round's
+    * vocabulary is a `SqlBridge.persistRows` copy and the round that
+    * supersedes it frees it; the returned vocabulary is the last copy,
+    * which ContextCleaner releases once it is unreachable.
     */
   def bpeTrainVocab(
       df: DataFrame,
       textCol: String,
       nMerges: Int): (Seq[(Long, String, String, Long)], DataFrame) = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    var vocab = df
+    var vocab = SqlBridge.persistRows(df
       .select(explode(words(col(textCol))).as("word"))
       .where(col("word") =!= "")
       .groupBy("word")
       .agg(count(lit(1)).as("cnt"))
       .withColumn(
         "s",
-        expr("' ' || array_join(transform(sequence(1, length(word)), i -> substr(word, i, 1)), '  ') || ' '"))
-    vocab.persist()
-    vocab.count()
+        expr("' ' || array_join(transform(sequence(1, length(word)), i -> substr(word, i, 1)), '  ') || ' '")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var rank = 1
     var exhausted = false
@@ -870,11 +872,9 @@ object TextAnalysis {
         val l = top(0).getAs[String]("l")
         val r = top(0).getAs[String]("r")
         merges += ((rank.toLong, l, r, top(0).getAs[Long]("pc")))
-        val next = vocab
-          .withColumn("s", replace(col("s"), lit(s" $l  $r "), lit(s" $l$r ")))
-          .persist()
-        next.count()
-        vocab.unpersist(blocking = false)
+        val next = SqlBridge.persistRows(
+          vocab.withColumn("s", replace(col("s"), lit(s" $l  $r "), lit(s" $l$r "))))
+        SqlBridge.releaseRows(vocab)
         vocab = next
         rank += 1
       }

@@ -48,10 +48,11 @@ object ExtTableFunctions {
   val FuzzyDecontamName = "fuzzy_decontaminate"
 
   /** The pair-graph TVFs (minhash, ppjoin, containment, clusters,
-    * excision, decontamination) go through `graft.Artifacts`: without
-    * it their whole signature→candidate→verify pipeline would re-run on
-    * EVERY SQL query (and, because Spark inlines duplicate CTE
-    * references, can re-run twice inside ONE query). The first call
+    * excision, decontamination) and `triangles` go through
+    * `graft.Artifacts`: without it their whole signature→candidate→verify
+    * pipeline (or the wedge joins) would re-run on EVERY SQL query (and,
+    * because Spark inlines duplicate CTE references, can re-run twice
+    * inside ONE query). The first call
     * writes the result to parquet and every later call reads the file,
     * for as long as the named relation's content is unchanged: the entry
     * is keyed on the relation's plan and files, not its name, so a
@@ -163,15 +164,17 @@ object ExtTableFunctions {
     * local clustering coefficients `(node, deg, n_tri, cc_micro, cc)`
     * over an undirected edge relation (default columns `a`, `b`;
     * duplicates/reversals/self-loops absorbed). The degree-ordered
-    * wedge-orientation plan — the same O(m^1.5) shape as the Scala path.
+    * wedge-orientation plan — the same O(m^1.5) shape as the Scala path,
+    * run once per (relation content, columns) through the artifact cache.
     */
   def trianglesBuilder(args: Seq[Expression]): LogicalPlan = {
     require(args.nonEmpty && args.length <= 3, s"usage: $TrianglesName(table[, acol[, bcol]])")
     val table = FoldTableFunctions.stringArg(TrianglesName, args, 0)
     val aCol = if (args.length > 1) FoldTableFunctions.stringArg(TrianglesName, args, 1) else "a"
     val bCol = if (args.length > 2) FoldTableFunctions.stringArg(TrianglesName, args, 2) else "b"
-    val spark = SparkSession.active
-    SqlBridge.analyzedPlan(graft.ext.Graph.triangles(spark.table(table), aCol, bCol))
+    cachedPlan(TrianglesName, Seq(table), aCol, bCol) { case Seq(edges) =>
+      graft.ext.Graph.triangles(edges, aCol, bCol)
+    }
   }
 
   /** `containment_pairs(table[, tau])` — directed shingle-containment

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.bridge.SqlBridge
 import graft.config.{Constants, DetectorConfig, TsQueryConfig}
 import graft.detect.Detectors
 import graft.model.TsSample
@@ -1263,29 +1264,23 @@ object DetectQueries {
         val splitMs = 1705363200000L // 2024-01-16T00:00Z: days 1-15 profile
         // the decomposition feeds three consumers (profile aggs +
         // calibration) and the profile is re-read by EVERY micro-batch's
-        // stream-static join — scoped persists, released after the
-        // memory sink has materialized
-        val stl = graft.ts.TsAlgebra.stlDecompose(
+        // stream-static join: both are stored once (`persistRows`)
+        val stl = SqlBridge.persistRows(graft.ts.TsAlgebra.stlDecompose(
           all.filter(col("tsMs") < splitMs).toDF(),
-          "seriesKey", "tsMs", "value", period = 24).persist()
-        try {
-          val profile = graft.streaming.MonitorStream
-            .seasonalProfileFrom(stl, "seriesKey", "tsMs").persist()
-          profile.count()
-          try {
-            val thr = graft.streaming.MonitorStream.calibratedThreshold(
-              stl.withColumn("dev", abs(col("resid_fp")) / 10000.0), "dev", qMille = 990)
-            graft.streaming.Replay
-              .seasonalReplay(
-                all.filter(col("tsMs") >= splitMs), profile, period = 24, threshold = thr,
-                p => p.tsMs / 86400000L)
-              .select(
-                keyAsLong.as("user_id"), col("tsMs").as("ts_ms"), col("value"),
-                col("phase").cast("long").as("phase"), col("resid_fp"),
-                round(col("dev"), 4).as("dev"), col("isAnomaly").as("is_anomaly"),
-                lit(thr).as("threshold"))
-          } finally profile.unpersist(blocking = false)
-        } finally stl.unpersist(blocking = false)
+          "seriesKey", "tsMs", "value", period = 24))
+        val profile = SqlBridge.persistRows(graft.streaming.MonitorStream
+          .seasonalProfileFrom(stl, "seriesKey", "tsMs"))
+        val thr = graft.streaming.MonitorStream.calibratedThreshold(
+          stl.withColumn("dev", abs(col("resid_fp")) / 10000.0), "dev", qMille = 990)
+        graft.streaming.Replay
+          .seasonalReplay(
+            all.filter(col("tsMs") >= splitMs), profile, period = 24, threshold = thr,
+            p => p.tsMs / 86400000L)
+          .select(
+            keyAsLong.as("user_id"), col("tsMs").as("ts_ms"), col("value"),
+            col("phase").cast("long").as("phase"), col("resid_fp"),
+            round(col("dev"), 4).as("dev"), col("isAnomaly").as("is_anomaly"),
+            lit(thr).as("threshold"))
       },
       Some(s"""WITH ${TsQueries.stlCteFor(s"(SELECT * FROM events WHERE epoch_ms(ts) < 1705363200000)")},
               |prof_p AS (SELECT user_id, phase, min(seasonal_fp) seasonal_fp FROM f GROUP BY 1, 2),
@@ -1332,29 +1327,23 @@ object DetectQueries {
       (s, dir) => {
         val all = pts(s, dir)
         val splitMs = 1705363200000L // 2024-01-16T00:00Z: days 1-15 profile
-        val stl = graft.ts.TsAlgebra.stlDecompose(
+        val stl = SqlBridge.persistRows(graft.ts.TsAlgebra.stlDecompose(
           all.filter(col("tsMs") < splitMs).toDF(),
-          "seriesKey", "tsMs", "value", period = 24).persist()
-        try {
-          val profile = graft.streaming.MonitorStream
-            .seasonalProfileFrom(stl, "seriesKey", "tsMs")
-            .where(col("seriesKey").cast("long") % 5 =!= 0)
-            .persist()
-          profile.count()
-          try {
-            val thr = graft.streaming.MonitorStream.calibratedThreshold(
-              stl.withColumn("dev", abs(col("resid_fp")) / 10000.0), "dev", qMille = 990)
-            graft.streaming.Replay
-              .seasonalReplay(
-                all.filter(col("tsMs") >= splitMs), profile, period = 24, threshold = thr,
-                p => p.tsMs / 86400000L, emitUnscored = true)
-              .select(
-                keyAsLong.as("user_id"), col("tsMs").as("ts_ms"), col("value"),
-                col("phase").cast("long").as("phase"), col("score_mode"), col("resid_fp"),
-                round(col("dev"), 4).as("dev"), col("isAnomaly").as("is_anomaly"),
-                lit(thr).as("threshold"))
-          } finally profile.unpersist(blocking = false)
-        } finally stl.unpersist(blocking = false)
+          "seriesKey", "tsMs", "value", period = 24))
+        val profile = SqlBridge.persistRows(graft.streaming.MonitorStream
+          .seasonalProfileFrom(stl, "seriesKey", "tsMs")
+          .where(col("seriesKey").cast("long") % 5 =!= 0))
+        val thr = graft.streaming.MonitorStream.calibratedThreshold(
+          stl.withColumn("dev", abs(col("resid_fp")) / 10000.0), "dev", qMille = 990)
+        graft.streaming.Replay
+          .seasonalReplay(
+            all.filter(col("tsMs") >= splitMs), profile, period = 24, threshold = thr,
+            p => p.tsMs / 86400000L, emitUnscored = true)
+          .select(
+            keyAsLong.as("user_id"), col("tsMs").as("ts_ms"), col("value"),
+            col("phase").cast("long").as("phase"), col("score_mode"), col("resid_fp"),
+            round(col("dev"), 4).as("dev"), col("isAnomaly").as("is_anomaly"),
+            lit(thr).as("threshold"))
       },
       Some(s"""WITH ${TsQueries.stlCteFor(s"(SELECT * FROM events WHERE epoch_ms(ts) < 1705363200000)")},
               |prof_p AS (SELECT user_id, phase, min(seasonal_fp) seasonal_fp FROM f

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import org.apache.spark.sql.SparkSession
 
 /** Bucketed-table source/sink surface — the storage-layout half of the
@@ -14,18 +14,18 @@ import org.apache.spark.sql.SparkSession
   *
   * The write itself pays ONE shuffle-by-key (hash into `buckets` files per
   * task) — the same price as one join's exchange — amortized over every
-  * subsequent join/aggregation on that key. Bucket metadata lives in the
-  * session catalog; `ensureBucketed` is idempotent per (table, dir) within
-  * a JVM so repeated queries reuse the files instead of rewriting.
+  * subsequent join/aggregation on that key. Each bucketed table is a
+  * `graft.Artifacts` entry: an external table at the artifact's own path,
+  * keyed on the source table's files, so repeated queries reuse it and a
+  * rewritten source builds a new one.
   */
 object Bucketed {
 
-  private val built = scala.collection.concurrent.TrieMap.empty[String, Unit]
-
   /** Write `table` from `dir` as a parquet table bucketed+sorted by
-    * `bucketCol` into the session warehouse; returns the catalog table
-    * name. Safe to call repeatedly — first call per JVM writes, the rest
-    * reuse.
+    * `bucketCol`; returns the catalog table name, which is taken from the
+    * artifact path's UUID. A repeat call over unchanged files reuses the
+    * table; the bucket column and count are part of the key, since the
+    * same table bucketed differently is a different physical layout.
     */
   def ensureBucketed(
       spark: SparkSession,
@@ -33,27 +33,16 @@ object Bucketed {
       table: String,
       bucketCol: String,
       buckets: Int): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    // bucketCol is part of the identity: the same table bucketed on a
-    // different key is a DIFFERENT physical layout
-    val name = s"graft_${table}_${bucketCol.toLowerCase}_b${buckets}_$safe"
-    built.getOrElseUpdate(name, {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      // the in-memory catalog forgets tables across JVMs but their
-      // warehouse directories persist — clear a stale location or the
-      // CREATE fails with LOCATION_ALREADY_EXISTS
-      val loc = new org.apache.hadoop.fs.Path(
-        spark.conf.get("spark.sql.warehouse.dir"), name.toLowerCase)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-      Tables.read(spark, dir, table)
-        .write
+    val source = Tables.read(spark, dir, table)
+    Artifacts.cached("bucketed", Seq(source), bucketCol.toLowerCase, buckets) { path =>
+      val name = new java.io.File(path).getName.replace('-', '_')
+      source.write
         .format("parquet")
-        .mode("overwrite")
         .bucketBy(buckets, bucketCol)
         .sortBy(bucketCol)
+        .option("path", path)
         .saveAsTable(name)
-    })
-    name
+      name
+    }
   }
 }

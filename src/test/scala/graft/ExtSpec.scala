@@ -881,9 +881,25 @@ class ExtSpec extends AnyFunSuite {
       if (has(i, j) && has(j, k) && has(i, k)) { triCount(i) += 1; triCount(j) += 1; triCount(k) += 1 }
     val deg = edges.flatMap(e => Seq(e._1, e._2)).groupBy(identity).view.mapValues(_.size.toLong).toMap
     assert(got == deg.map { case (v, d) => v -> ((d, triCount(v))) }.toMap)
-    // plan shape: three hash joins, never a cartesian/nested-loop product
-    val plan = Graph.triangles(edges.toDF("x", "y"), "x", "y").queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"), plan)
+    // plan shape: three hash joins, never a cartesian/nested-loop product.
+    // The result is stored rows, so its own plan is a scan: read the plans
+    // of the runs that stored them (each persistRows run is one SQL
+    // execution, reported to query listeners under that name)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (f == "persistRows") plans.add(qe.executedPlan.toString): Unit
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Graph.triangles(edges.toDF("x", "y"), "x", "y")
+      org.apache.spark.graft.SparkInternals.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.toArray(Array.empty[String]).mkString("\n")
+    assert("(SortMerge|BroadcastHash|ShuffledHash)Join".r.findFirstIn(all).isDefined,
+      s"no join in the materializing runs' plans:\n$all")
+    assert(!all.contains("CartesianProduct") && !all.contains("BroadcastNestedLoopJoin"), all)
   }
 
   test("triangles: a run that fails throws and leaves no cache entry behind") {
@@ -893,10 +909,14 @@ class ExtSpec extends AnyFunSuite {
     // local relation, which the optimizer would evaluate while planning)
     val edges = spark.range(1, 5).select(col("id").as("x"), (col("id") % 4 + 1).as("y"))
       .withColumn("y", expr("CASE WHEN x = 3 THEN raise_error('bad edge') ELSE y END"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val ex = intercept[Exception](Graph.triangles(edges, "x", "y"))
     assert(ex.getMessage.contains("bad edge"), ex.getMessage)
     assert(org.apache.spark.graft.SparkInternals.cacheManagerIsEmpty(spark),
       "a failed triangles run must release every frame it persisted, the result included")
+    // checked at once, with no GC: the failed run itself unpersists
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"a failed triangles run left persisted RDDs behind: $added")
   }
 
   test("semanticPairs: verified subset of exact pairs; within-cell recall is total; dups always pair") {
@@ -2667,6 +2687,27 @@ class ExtSpec extends AnyFunSuite {
       assert(Dedup.ppjoinPairs(docs, "doc_id", "text", 3, 0.5).collect().nonEmpty)
       assert(Dedup.ppjoinFunnel(docs, "doc_id", "text", 3, 0.5)("verified_pairs") > 0)
       assert(Dedup.minhashLshFunnel(docs, "doc_id", "text", n = 3, tau = 0.3)("n_verified_pairs") > 0)
+    }
+  }
+
+  test("the index builders, triangles and BPE training pin nothing once unreachable") {
+    assertReleased {
+      val embs = Tables.embeddings(spark, sf)
+      val delta = embs.where(col("vec_id") % 10 === 0)
+      val ivf = Similarity.buildIvfIndex(embs, "vec_id", "embedding", nlist = 8)
+      assert(Similarity.ivfProbe(ivf, col("id") < 5, k = 5).count() > 0)
+      assert(Similarity.ivfTopK(embs, "vec_id", "embedding", col("id") < 5, k = 5).count() > 0)
+      assert(Similarity.semanticPairsAuto(embs, "vec_id", "embedding", tau = 0.4).count() > 0)
+      val pq = Similarity.buildPqIndex(embs, "vec_id", "embedding", nlist = 8)
+      assert(Similarity.pqProbe(pq, col("id") < 5, k = 5).count() > 0)
+      assert(Similarity.ivfAppend(ivf, delta, "vec_id", "embedding").assigned.count() > 0)
+      assert(Similarity.pqAppend(pq, delta, "vec_id", "embedding").coded.count() > 0)
+      val lsh = Similarity.buildLshIndex(embs, "vec_id", "embedding", dims = 64, nBits = 6)
+      assert(Similarity.lshTopKOn(lsh, col("id") < 5, k = 5).count() > 0)
+      val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L)).toDF("x", "y")
+      assert(graft.ext.Graph.triangles(edges, "x", "y").count() == 4L)
+      val (merges, vocab) = TextAnalysis.bpeTrainVocab(Tables.documents(spark, sf), "text", nMerges = 3)
+      assert(merges.nonEmpty && vocab.count() > 0)
     }
   }
 
