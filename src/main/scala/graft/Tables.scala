@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType, TimestampType, TimestampNTZType}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types.{LongType, TimestampType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -13,23 +15,28 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampType, Timestam
 object Tables {
 
   /** Loads `dir/name.parquet`. A bare parquet read runs a Spark job to
-    * infer the schema from a file footer; this one reuses the schema a
-    * previous load of the same files inferred in the same session, so a
-    * repeat load of an unchanged table runs no job. The catalog key is the
-    * table path plus every file under it (path, length, modification
-    * time), so an appended or rewritten file re-infers.
+    * infer the schema from a file footer and lists the files into a new
+    * file index; this one reuses the relation (inferred schema and file
+    * index) a previous load of the same files built in the same session, so
+    * a repeat load of an unchanged table runs no job and lists the files
+    * only to check them. The catalog key is the table path plus every file
+    * under it (path, length, modification time), so an appended or
+    * rewritten file loads afresh.
     */
   def read(spark: SparkSession, dir: String, name: String): DataFrame = {
     Sessions.tune(spark)
     val path = s"$dir/$name.parquet"
-    SchemaCatalog.fingerprint(spark, path) match {
+    RelationCatalog.fingerprint(spark, path) match {
       case None => spark.read.parquet(path) // missing path: Spark raises its own error
       case Some(fp) =>
-        SchemaCatalog.lookup(spark, path, fp) match {
-          case Some(schema) => spark.read.schema(schema).parquet(path)
+        RelationCatalog.lookup(spark, path, fp) match {
+          case Some(relation) => spark.baseRelationToDataFrame(relation)
           case None =>
             val df = spark.read.parquet(path)
-            SchemaCatalog.store(spark, path, fp, df.schema)
+            graft.bridge.SqlBridge.analyzedPlan(df) match {
+              case l: LogicalRelation => RelationCatalog.store(spark, path, fp, l.relation)
+              case _ =>
+            }
             df
         }
     }
@@ -37,7 +44,7 @@ object Tables {
 
   /** Every file under `path` as (path, length, modification time), sorted;
     * None when the path does not exist. The identity of a file-backed
-    * input: what the schema catalog and the artifact cache key on.
+    * input: what the relation catalog and the artifact cache key on.
     */
   private[graft] def listing(spark: SparkSession, path: String): Option[Seq[(String, Long, Long)]] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -54,10 +61,10 @@ object Tables {
     }
   }
 
-  /** Session-scoped inferred schemas, one per table path, each valid for
-    * the file listing (and inference conf) it was inferred under.
+  /** Session-scoped file relations, one per table path, each valid for the
+    * file listing (and inference conf) it was built under.
     */
-  private object SchemaCatalog {
+  private object RelationCatalog {
     /** every file under the table path as (path, length, mtime), plus the
       * session conf that changes what parquet schema inference returns */
     type Fingerprint = (Seq[(String, Long, Long)], Seq[Option[String]])
@@ -66,17 +73,17 @@ object Tables {
       "spark.sql.parquet.int96AsTimestamp", "spark.sql.parquet.inferTimestampNTZ.enabled",
       "spark.sql.parquet.mergeSchema")
     private val bySession = java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Map[String, (Fingerprint, StructType)]])
+      new java.util.WeakHashMap[SparkSession, Map[String, (Fingerprint, BaseRelation)]])
 
     def fingerprint(spark: SparkSession, path: String): Option[Fingerprint] =
       listing(spark, path).map(files => (files, InferenceConf.map(spark.conf.getOption)))
 
-    def lookup(spark: SparkSession, path: String, fp: Fingerprint): Option[StructType] =
-      Option(bySession.get(spark)).flatMap(_.get(path)).collect { case (f, schema) if f == fp => schema }
+    def lookup(spark: SparkSession, path: String, fp: Fingerprint): Option[BaseRelation] =
+      Option(bySession.get(spark)).flatMap(_.get(path)).collect { case (f, relation) if f == fp => relation }
 
-    def store(spark: SparkSession, path: String, fp: Fingerprint, schema: StructType): Unit =
+    def store(spark: SparkSession, path: String, fp: Fingerprint, relation: BaseRelation): Unit =
       bySession.synchronized {
-        bySession.put(spark, Option(bySession.get(spark)).getOrElse(Map.empty).updated(path, (fp, schema)))
+        bySession.put(spark, Option(bySession.get(spark)).getOrElse(Map.empty).updated(path, (fp, relation)))
       }
   }
 

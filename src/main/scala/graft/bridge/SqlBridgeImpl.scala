@@ -53,8 +53,9 @@ object SqlBridgeImpl {
     * failed materialization leaves nothing stored.
     */
   def persistRows(ds: Dataset[_]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.AttributeSet
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSet}
     import org.apache.spark.sql.catalyst.plans.logical.Statistics
+    import org.apache.spark.sql.catalyst.plans.physical.Partitioning
     import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
     import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution}
     val cds = ds.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
@@ -67,14 +68,21 @@ object SqlBridgeImpl {
     // output attributes as Dataset.localCheckpoint derives them, but the
     // partitioning of the plan that produced the rows: under AQE that is
     // the final plan, which only exists now that it ran, so consumers
-    // keyed like it (a hash-partitioned input) plan no shuffle of their own
+    // keyed like it (a hash-partitioned input) plan no shuffle of their own.
+    // The optimizer may have renamed an output attribute (a redundant alias
+    // removed), so the partitioning is re-expressed over the frame's output
+    // by column position.
     val lr = LogicalRDD.fromDataset(rows, cds, cds.isStreaming)
     val ran = qe.executedPlan match {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+    val byPosition = AttributeMap(ran.output.zip(lr.output))
     val partitioning = ran.outputPartitioning match {
-      case p: Expression if !p.references.subsetOf(AttributeSet(lr.output)) => lr.outputPartitioning
+      case p: Expression =>
+        val onOutput = p.transform { case a: Attribute if byPosition.contains(a) => byPosition(a) }
+        if (onOutput.references.subsetOf(AttributeSet(lr.output))) onOutput.asInstanceOf[Partitioning]
+        else lr.outputPartitioning
       case p => p
     }
     val stats = Statistics(sizeInBytes = EstimationUtils.getSizePerRow(lr.output) * n, rowCount = Some(n))

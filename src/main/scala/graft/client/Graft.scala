@@ -6,22 +6,23 @@ import graft.detect.Detectors
 import graft.model.TsSample
 import graft.ts.{TsAlgebra, TsCols}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The three result facets of the reference `AnomalyResult`
   * (/root/reference/potoos/models/anomaly.py:39-45) as Datasets — kept
   * distributed instead of collected client-side.
   *
-  * The facets are not fully lazy: `Graft.monitor` has already run the
-  * range query and the min-points guard, and all three facets read those
-  * guarded points from one persisted copy (memory, spilling to disk). The
-  * result holds that copy until it (and every frame built on a facet) is
-  * unreachable; Spark's ContextCleaner releases it at the next driver GC
-  * after that, which an idle driver may not run for up to
+  * The facets are not lazy: `Graft.monitor` has already run the range
+  * query, the min-points guard, the detector and the threshold, and all
+  * three facets read that one scored copy (memory, spilling to disk).
+  * What is left for a facet to run is a filter (`scores`) or one
+  * per-series aggregate (`anomalies`, `metadata`). The result holds the
+  * scored copy until it (and every frame built on a facet) is unreachable;
+  * Spark's ContextCleaner releases it at the next driver GC after that,
+  * which an idle driver may not run for up to
   * `spark.cleaner.periodicGC.interval` (30 min by default). A monitor over
-  * a whole table keeps a copy of that table's guarded points until then.
-  * Each facet's own scoring, windowing and metadata stages run when the
-  * facet is executed.
+  * a whole table keeps a scored copy of that table's guarded points until
+  * then.
   */
 final case class MonitorResult(scores: DataFrame, anomalies: DataFrame, metadata: DataFrame)
 
@@ -55,10 +56,15 @@ final class GraftClient(
 
 object Graft {
 
-  /** Runs the range query and the min-points guard once, then builds the
-    * three facets over those points; see `MonitorResult` for what the
-    * result keeps alive. With `refineAlgorithmName` set, the anomaly
-    * windows are scored and materialized here too (`refineExact`).
+  /** Scores once per request. The range query's guarded points are
+    * scored and thresholded, every point is tagged with its anomaly run
+    * (D12 `runIds`) and its series' extent (D15 `extent`), and those rows
+    * are materialized as one copy hash-partitioned by series; see
+    * `MonitorResult` for what the result keeps alive. A series the detector
+    * scored no row of (a baseline covering none of its points) keeps one
+    * row of nulls in the copy, so it still gets its metadata row. With
+    * `refineAlgorithmName` set, the anomaly windows are re-scored and
+    * materialized here too (`refineExact`), over the copy's scored points.
     */
   def monitor(
       df: DataFrame,
@@ -68,39 +74,53 @@ object Graft {
       baseline: Option[DataFrame] = None): MonitorResult = {
     val spark = df.sparkSession
     import spark.implicits._
-    val points = SqlBridge.persistRows(guardedPoints(df, cols, tsCfg)).as[TsSample]
-    val scores = Detectors.score(points, detCfg, baseline)
+    val points = guardedPoints(df, cols, tsCfg)
+    val scored = Detectors.score(points.as[TsSample], detCfg, baseline)
+    val runs =
+      if (detCfg.scoreOnly) scored.withColumn("_run", lit(null).cast("long"))
+      else Detectors.runIds(Detectors.withThreshold(scored, detCfg))
+    // both sides derive from the one series exchange: the merge hint keeps
+    // the planner from broadcasting the scored side (a job of its own)
+    val copy = SqlBridge.persistRows(
+      Detectors.extent(points)
+        .join(runs.withColumn("_scored", lit(true)).hint("merge"), Seq("seriesKey"), "left"))
+    val scores = copy
+      .where(col("_scored"))
+      .select(scored.columns.map(c => col("`" + c.replace("`", "``") + "`")): _*)
     val anomalies =
       if (detCfg.scoreOnly) spark.emptyDataset[graft.model.Anomaly].toDF()
       else {
-        val wins = Detectors.anomalies(Detectors.withThreshold(scores, detCfg))
+        val wins = Detectors.runWindows(copy)
         detCfg.refineAlgorithmName match {
           case Some(r) =>
-            Detectors.refineExact(points, wins, detCfg.copy(algorithmName = r, refineAlgorithmName = None))
+            Detectors.refineExact(
+              scores.select("seriesKey", "tsMs", "value").as[TsSample], wins,
+              detCfg.copy(algorithmName = r, refineAlgorithmName = None))
           case None => wins
         }
       }
-    MonitorResult(scores, anomalies, Detectors.metadata(points, anomalies, detCfg.algorithmName))
+    MonitorResult(scores, anomalies, Detectors.runMetadata(copy, detCfg.algorithmName))
   }
 
   /** The detectors' input, unexecuted: the range query's rows as
-    * `TsSample`s, series under the minimum length dropped, hash-partitioned
-    * by series. Materialized with that partitioning, it lets every facet's
-    * per-series operators (folds, windows, per-key aggregates) run without
-    * a shuffle of their own. The query's global order is skipped unless a
-    * COUNT limit needs it to pick its first N rows.
+    * `TsSample`s, hash-partitioned by series, series under the minimum
+    * length dropped by a fold over those partitions. The detector's
+    * per-series operators (folds, windows, per-key aggregates) and the
+    * series extent then run without a shuffle of their own, so this
+    * repartition is the request's one exchange. The query's global order is
+    * skipped unless a COUNT limit needs it to pick its first N rows.
     */
   private[graft] def guardedPoints(df: DataFrame, cols: TsCols, tsCfg: TsQueryConfig): DataFrame = {
-    import df.sparkSession.implicits._
     val rows = TsAlgebra.select(df, tsCfg, cols)
     val queried = if (tsCfg.count.isDefined) TsAlgebra.order(rows, tsCfg, cols) else rows
     // any key type (Redis-style `host:metric` strings, numeric ids)
     // casts losslessly to the engine's string series key
-    Detectors.minPointsGuard(
-      queried.select(
-        col(cols.key).cast("string").as("seriesKey"),
-        col(cols.ts).cast("long").as("tsMs"),
-        col(cols.value).cast("double").as("value")).as[TsSample])
-      .repartition(col("seriesKey"))
+    Detectors.minPointsFold(
+      queried
+        .select(
+          col(cols.key).cast("string").as("seriesKey"),
+          col(cols.ts).cast("long").as("tsMs"),
+          col(cols.value).cast("double").as("value"))
+        .repartition(col("seriesKey")))
   }
 }

@@ -39,6 +39,26 @@ object Detectors {
     points.toDF().join(keep, Seq("seriesKey"), "left_semi")
   }
 
+  /** D0 as a fold over each series' (ts-sorted) points: a series' rows pass
+    * once it has reached `Constants.MinPoints` of them (the kernel holds
+    * fewer than that), so over rows already hash-partitioned by
+    * `seriesKey` the guard adds no job, no exchange and no broadcast of its
+    * own. The fold consumes every input column, which keeps Catalyst from
+    * pruning a consumer's unused columns below it: every branch over the
+    * guarded rows reads one identical, reusable exchange (a window count
+    * would let a branch that never reads `value` shuffle its own narrower
+    * copy). Null-tolerant like `minPointsGuard`.
+    */
+  private[graft] def minPointsFold(rows: DataFrame): DataFrame = {
+    import rows.sparkSession.implicits._
+    KeyedFold
+      .foldOnExec[GuardPoint, GuardPoint, String](rows.as[GuardPoint], "seriesKey", "tsMs", _.seriesKey)(() =>
+        new MinPointsKernel(Constants.MinPoints))
+      // aliased: a join of two branches over the guarded rows (the monitor's
+      // extent ⟕ scores) re-instances one side's attributes at a Project
+      .select(col("seriesKey").as("seriesKey"), col("tsMs").as("tsMs"), col("value").as("value"))
+  }
+
   /** D2 exp_avg: |v − ema| / stddev_pop(values) (signed, un-divided when
     * the series is constant — faithful to the reference's delegate).
     * The per-key stddev is an aggregate of the INPUT, joined onto the
@@ -532,24 +552,36 @@ object Detectors {
     scores.withColumn("threshold", thr)
   }
 
-  /** D12 anomaly-window assembly: group CONSECUTIVE above-threshold points
-    * into (start, end, max score, argmax ts) — run-length sessionization
-    * via the lag/cumulative-count window idiom (SURVEY.md §2.4 D12).
+  /** D12 run ids: each point above its threshold gets, in column `_run`,
+    * the id of its run of CONSECUTIVE above-threshold points (unique within
+    * its series); every other point gets null. Run-length sessionization
+    * via the lag/cumulative-count window idiom (SURVEY.md §2.4 D12): the id
+    * is the number of points at or below the threshold so far.
     */
-  def anomalies(scoresWithThreshold: DataFrame): DataFrame = {
-    val wOrd = Window.partitionBy("seriesKey").orderBy("tsMs")
-    scoresWithThreshold
-      .withColumn("_hot", col("score") > col("threshold"))
-      .withColumn("_grp", sum(when(col("_hot"), 0).otherwise(1)).over(wOrd))
-      .where(col("_hot"))
-      .groupBy(col("seriesKey"), col("_grp"))
+  private[graft] def runIds(scoresWithThreshold: DataFrame): DataFrame = {
+    val hot = col("score") > col("threshold")
+    val below = sum(when(hot, 0L).otherwise(1L)).over(Window.partitionBy("seriesKey").orderBy("tsMs"))
+    scoresWithThreshold.withColumn("_run", when(hot, below))
+  }
+
+  /** D12 windows: one (start, end, max score, argmax ts) row per run of
+    * `runIds`' rows.
+    */
+  private[graft] def runWindows(runs: DataFrame): DataFrame =
+    runs
+      .where(col("_run").isNotNull)
+      .groupBy(col("seriesKey"), col("_run"))
       .agg(
         min("tsMs").as("startTsMs"),
         max("tsMs").as("endTsMs"),
         max("score").as("anomalyScore"),
         max_by(col("tsMs"), col("score")).as("exactTsMs"))
       .select("seriesKey", "startTsMs", "endTsMs", "anomalyScore", "exactTsMs")
-  }
+
+  /** D12 anomaly-window assembly: consecutive above-threshold points as
+    * (start, end, max score, argmax ts) windows.
+    */
+  def anomalies(scoresWithThreshold: DataFrame): DataFrame = runWindows(runIds(scoresWithThreshold))
 
   /** D13 refinement: re-score each anomaly window's slice with a second
     * algorithm and re-pin exact_timestamp at that algorithm's argmax.
@@ -632,23 +664,44 @@ object Detectors {
   private def baselineOrFail(b: Option[DataFrame]): DataFrame =
     b.getOrElse(throw new IllegalArgumentException("this algorithm requires a baseline series"))
 
+  /** D15 extent of the analyzed points: per series (dataPointsAnalyzed,
+    * startMs, endMs).
+    */
+  private[graft] def extent(points: DataFrame): DataFrame =
+    points
+      .groupBy("seriesKey")
+      .agg(count(lit(1)).as("dataPointsAnalyzed"), min("tsMs").as("startMs"), max("tsMs").as("endMs"))
+
+  /** D15 rows over a per-series `extent` plus its `anomaliesFound` count
+    * (null reads as 0).
+    */
+  private def describe(counted: DataFrame, algorithm: String): DataFrame =
+    counted
+      .withColumn("anomaliesFound", coalesce(col("anomaliesFound"), lit(0L)))
+      .withColumn("algorithm", lit(algorithm))
+      .withColumn("durationMs", col("endMs") - col("startMs"))
+      .select("seriesKey", "algorithm", "dataPointsAnalyzed", "anomaliesFound", "startMs", "endMs", "durationMs")
+
+  /** D15 metadata over a copy whose rows carry their series' `extent` and
+    * `runIds`' column: one aggregate per series, counting its runs.
+    */
+  private[graft] def runMetadata(runs: DataFrame, algorithm: String): DataFrame =
+    describe(
+      runs
+        .groupBy("seriesKey")
+        .agg(
+          first("dataPointsAnalyzed").as("dataPointsAnalyzed"),
+          first("startMs").as("startMs"),
+          first("endMs").as("endMs"),
+          count_distinct(col("_run")).as("anomaliesFound")),
+      algorithm)
+
   /** D15 metadata: one aggregate row per series
     * (/root/reference/potoos/client.py:97-109): points analyzed, anomalies
     * found, time range, duration.
     */
   def metadata(points: Dataset[TsSample], anomalies: DataFrame, algorithm: String): DataFrame = {
-    val base = points.toDF()
-      .groupBy("seriesKey")
-      .agg(
-        count(lit(1)).as("dataPointsAnalyzed"),
-        min("tsMs").as("startMs"),
-        max("tsMs").as("endMs"))
-      .withColumn("durationMs", col("endMs") - col("startMs"))
     val found = anomalies.groupBy("seriesKey").agg(count(lit(1)).as("anomaliesFound"))
-    base
-      .join(found, Seq("seriesKey"), "left")
-      .withColumn("anomaliesFound", coalesce(col("anomaliesFound"), lit(0L)))
-      .withColumn("algorithm", lit(algorithm))
-      .select("seriesKey", "algorithm", "dataPointsAnalyzed", "anomaliesFound", "startMs", "endMs", "durationMs")
+    describe(extent(points.toDF()).join(found, Seq("seriesKey"), "left"), algorithm)
   }
 }

@@ -20,6 +20,26 @@ final class ExpAvgKernel(alpha: Double) extends SeriesKernel {
   override def flush(): Iterator[RawScored] = Iterator.empty
 }
 
+/** A sample as the D0 guard sees it: any field may be null. */
+final case class GuardPoint(seriesKey: String, tsMs: java.lang.Long, value: java.lang.Double)
+
+/** D0 min-cardinality guard as a fold: a series' points pass through once
+  * it has `minPoints` of them; a shorter series is dropped at its end.
+  * Holds at most `minPoints − 1` points.
+  */
+final class MinPointsKernel(minPoints: Int) extends StreamKernel[GuardPoint, GuardPoint] {
+  private val held = scala.collection.mutable.ArrayBuffer.empty[GuardPoint]
+  private var n = 0
+
+  override def feed(p: GuardPoint): Iterator[GuardPoint] = {
+    n += 1
+    if (n < minPoints) { held += p; Iterator.empty }
+    else if (n == minPoints) { val out = (held :+ p).toList; held.clear(); out.iterator }
+    else Iterator.single(p)
+  }
+  override def flush(): Iterator[GuardPoint] = Iterator.empty
+}
+
 /** Sample enriched with per-series count + value stddev (lag-window EMA). */
 final case class CountedPoint(seriesKey: String, tsMs: Long, value: Double, n: Long, sd: Double)
 

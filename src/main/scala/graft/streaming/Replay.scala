@@ -38,19 +38,22 @@ object Replay {
     // fixed cost for driver-fed verification-scale inputs (stream_cms
     // measured minutes of Verify wall at sf0.001). Partition count
     // never changes WHAT a stateful query computes (hash-partitioned
-    // aggregations/joins/dedup are partition-count-independent); the
-    // session value is restored when the stream stops, so batch plans
-    // around the replay are untouched. Production streams never pass
-    // through here (readStream sources size their own state).
-    val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    try {
-      val q = out.writeStream.outputMode("append").format("memory").queryName(table).start()
-      try feed(q) finally q.stop()
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
-      case None => spark.conf.unset("spark.sql.shuffle.partitions")
+    // aggregations/joins/dedup are partition-count-independent). The
+    // query clones the session when it is constructed, inside `start()`,
+    // and plans every batch with that clone, so the shared session's
+    // value is restored as soon as `start()` returns: batch plans run
+    // while the replay feeds are untouched. Production streams never
+    // pass through here (readStream sources size their own state).
+    val q = {
+      val prev = spark.conf.getOption("spark.sql.shuffle.partitions")
+      spark.conf.set("spark.sql.shuffle.partitions", "1")
+      try out.writeStream.outputMode("append").format("memory").queryName(table).start()
+      finally prev match {
+        case Some(v) => spark.conf.set("spark.sql.shuffle.partitions", v)
+        case None => spark.conf.unset("spark.sql.shuffle.partitions")
+      }
     }
+    try feed(q) finally q.stop()
     spark.table(table)
   }
 

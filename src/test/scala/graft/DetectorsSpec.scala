@@ -28,6 +28,12 @@ class DetectorsSpec extends AnyFunSuite {
       (2, 1000, 1.0), (2, 2000, 1.0), (2, 3000, 1.0), (2, 4000, 1.0))
     val kept = Detectors.minPointsGuard(mixed).select("seriesKey").distinct().as[String].collect()
     assert(kept.toSeq == Seq("2"))
+    // the fold form keeps the same series, and counts a point with a null value
+    val withNull = Seq[(String, Long, java.lang.Double)](
+      ("3", 1000L, 1.0), ("3", 2000L, null), ("3", 3000L, 1.0), ("3", 4000L, 1.0)).toDF("seriesKey", "tsMs", "value")
+    val folded = Detectors.minPointsFold(mixed.toDF().union(withNull)).groupBy("seriesKey").count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(folded == Map("2" -> 4L, "3" -> 4L))
   }
 
   test("derivative detector flags the spike; windows + metadata match the reference fixture") {
@@ -520,7 +526,7 @@ class DetectorsSpec extends AnyFunSuite {
     val before = sc.getPersistentRDDs.keySet
     val res = Graft.monitor(monitorInput(), monitorCols)
     val added = sc.getPersistentRDDs.keySet -- before
-    assert(added.size == 1, s"monitor should persist exactly the guarded points, persisted $added")
+    assert(added.size == 1, s"monitor should persist exactly the scored copy, persisted $added")
     val scores = sortedRows(res.scores)
     SparkInternals.dropRddBlocks(sc, added.head)
     assert(SparkInternals.rddBlocks(sc, added.head).isEmpty)
@@ -528,6 +534,96 @@ class DetectorsSpec extends AnyFunSuite {
     assert(sortedRows(res.anomalies) == sortedRows(fresh.anomalies) && sortedRows(fresh.anomalies).nonEmpty)
     assert(sortedRows(res.metadata) == sortedRows(fresh.metadata))
     assert(sortedRows(res.scores) == scores && scores.size == 21)
+  }
+
+  /** Spark jobs started, and the physical plans of the SQL executions that
+    * ended, while `body` ran. */
+  private def executionsIn(body: => Unit): (Int, Seq[org.apache.spark.sql.execution.SparkPlan]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        plans.add(qe.executedPlan)
+    }
+    SparkInternals.drainListeners(sc)
+    sc.addSparkListener(jl)
+    spark.listenerManager.register(ql)
+    try {
+      body
+      SparkInternals.drainListeners(sc)
+      (jobs.get, plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq)
+    } finally {
+      spark.listenerManager.unregister(ql)
+      sc.removeSparkListener(jl)
+    }
+  }
+
+  private object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  test("monitor: one request scores once and runs at most 5 jobs across its build and three facets") {
+    val (jobs, plans) = executionsIn {
+      val res = Graft.monitor(monitorInput(), monitorCols)
+      Seq(res.scores, res.anomalies, res.metadata).foreach(_.collect())
+    }
+    // the default detector (derivative) folds each series with KeyedFold
+    val scoring = plans.filter(p => Aqe.find(p)(_.nodeName == "KeyedFold").isDefined)
+    assert(scoring.size == 1, s"the scoring plan ran in ${scoring.size} executions:\n${plans.mkString("\n")}")
+    val shuffles = Aqe.collect(scoring.head) { case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
+    assert(shuffles.size == 1, s"the scored copy's plan must hold only the series exchange:\n${scoring.head}")
+    // the series exchange, the scored copy, then one job per facet
+    assert(jobs <= 5, s"a monitor request ran $jobs jobs")
+  }
+
+  test("monitor: metadata and windows match the facet-by-facet composition for every kind of scorer") {
+    val input = monitorInput()
+    val guarded = Detectors.minPointsGuard(
+      input.select($"series".as("seriesKey"), $"ts_ms".as("tsMs"), $"value").as[TsSample]).as[TsSample]
+    // a baseline for part of web1:cpu only: db#2:mem has no scored row
+    val partial = (1 to 8).map(i => ("web1:cpu", i * 1000L, 11.0 + i)).toDF("seriesKey", "tsMs", "baseline")
+    val full = input.where($"series" =!= "short")
+      .select($"series".as("seriesKey"), $"ts_ms".as("tsMs"), ($"value" * 0.9).as("baseline"))
+    Detectors.register("every_other_point", (points, _, _) =>
+      points.toDF().where($"tsMs" % 2000 === 0).withColumn("score", $"value"))
+    def canon(df: org.apache.spark.sql.DataFrame): Seq[String] = sortedRows(
+      df.select(df.schema.fields.toSeq.map { f =>
+        if (f.dataType == org.apache.spark.sql.types.DoubleType)
+          org.apache.spark.sql.functions.round(df(f.name), 9).as(f.name)
+        else df(f.name)
+      }: _*))
+    val cases = Seq(
+      "diff_percent_threshold, partial baseline" -> (DetectorConfig(
+        algorithmName = "diff_percent_threshold", percentThresholdUpper = Some(5.0),
+        percentThresholdLower = Some(5.0)), Some(partial)),
+      "sign_test" -> (DetectorConfig(
+        algorithmName = "sign_test", signTestWindowPoints = 3, signTestConfidence = 0.5), Some(full)),
+      "custom scorer dropping rows" -> (DetectorConfig(algorithmName = "every_other_point"), None),
+      "refine" -> (DetectorConfig(
+        refineAlgorithmName = Some("absolute_threshold"), absoluteThresholdUpper = Some(12.0)), None),
+      "scoreOnly" -> (DetectorConfig(scoreOnly = true), None))
+    cases.foreach { case (name, (cfg, baseline)) =>
+      val res = Graft.monitor(input, monitorCols, detCfg = cfg, baseline = baseline)
+      val scores = Detectors.score(guarded, cfg, baseline)
+      val wins =
+        if (cfg.scoreOnly) spark.emptyDataset[graft.model.Anomaly].toDF()
+        else {
+          val w = Detectors.anomalies(Detectors.withThreshold(scores, cfg))
+          cfg.refineAlgorithmName.fold(w)(r =>
+            Detectors.refineExact(guarded, w, cfg.copy(algorithmName = r, refineAlgorithmName = None)))
+        }
+      assert(canon(res.scores) == canon(scores), name)
+      assert(canon(res.anomalies) == canon(wins), name)
+      assert(canon(res.metadata) == canon(Detectors.metadata(guarded, wins, cfg.algorithmName)), name)
+      if (!cfg.scoreOnly) assert(canon(wins).nonEmpty, s"$name: the case must find an anomaly")
+    }
+    val meta = Graft.monitor(input, monitorCols, detCfg = cases.head._2._1, baseline = Some(partial)).metadata
+      .collect().map(r => r.getAs[String]("seriesKey") -> r.getAs[Long]("dataPointsAnalyzed")).toMap
+    assert(meta == Map("web1:cpu" -> 12L, "db#2:mem" -> 9L))
   }
 
   test("refine and chunked EMA leave no cached relation or persisted RDD behind") {

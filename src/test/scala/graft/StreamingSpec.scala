@@ -1058,6 +1058,35 @@ class StreamingSpec extends AnyFunSuite {
     assert(oneChunk == batch)
   }
 
+  test("replay: the stream's state runs on 1 partition while a batch plan beside it keeps the session's count") {
+    import graft.streaming.Replay
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions.col
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    object Aqe extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "5")
+    try {
+      val mem = MemoryStream[(String, Long)]
+      var batchPartitions = Seq.empty[Int]
+      var statePartitions = Seq.empty[Long]
+      Replay.runSink(spark, mem.toDF().dropDuplicates("_1")) { q =>
+        mem.addData(("a", 1L), ("b", 2L), ("a", 3L))
+        q.processAllAvailable()
+        val agg = spark.range(0, 100).groupBy((col("id") % 7).as("g")).count()
+        assert(agg.count() == 7)
+        batchPartitions = Aqe.collect(agg.queryExecution.executedPlan) {
+          case e: ShuffleExchangeExec => e.outputPartitioning.numPartitions
+        }
+        statePartitions = q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numShufflePartitions))
+      }
+      assert(batchPartitions.nonEmpty && batchPartitions.forall(_ == 5),
+        s"a batch plan run while the replay was active planned $batchPartitions partitions")
+      assert(statePartitions.nonEmpty && statePartitions.forall(_ == 1L), s"state partitions: $statePartitions")
+      assert(spark.conf.get("spark.sql.shuffle.partitions") == "5")
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   test("streaming fuzzy decontam: re-delivered doc appends once per horizon; eviction re-emits (documented divergence)") {
     import graft.streaming.{FuzzyDecontamStream, Replay}
     import graft.streaming.FuzzyDecontamStream.TrainArrival

@@ -71,4 +71,28 @@ class TablesSpec extends AnyFunSuite {
     assert(rewriteJobs >= 1, "a rewritten file must re-infer")
     assert(rewritten.columns.contains("extra"), rewritten.schema.treeString)
   }
+
+  test("a repeat load reuses the listed file index; the load after an append sees the new file's rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    def index(df: org.apache.spark.sql.DataFrame) = graft.bridge.SqlBridge.analyzedPlan(df) match {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation].location
+      case p => fail(s"not a file relation: $p")
+    }
+    val dir = java.nio.file.Files.createTempDirectory("tables-spec").toString
+    val table = s"$dir/idx.parquet"
+    Seq(("a", 1L, 1.0), ("b", 2L, 2.0)).toDF("k", "ts", "v").coalesce(1).write.parquet(table)
+
+    val first = Tables.read(spark, dir, "idx")
+    val again = Tables.read(spark, dir, "idx")
+    assert(index(again) eq index(first), "a repeat load of unchanged files must not list them into a new index")
+    // two loads are still two relations to the analyzer: a self-join resolves
+    assert(first.join(again, Seq("k")).count() == 2)
+
+    Seq(("c", 3L, 3.0)).toDF("k", "ts", "v").coalesce(1).write.mode("append").parquet(table)
+    val appended = Tables.read(spark, dir, "idx")
+    assert(!(index(appended) eq index(first)))
+    assert(appended.select("k").as[String].collect().sorted.toSeq == Seq("a", "b", "c"))
+    assert(index(Tables.read(spark, dir, "idx")) eq index(appended))
+  }
 }
